@@ -136,21 +136,7 @@ object GraftFunctions {
       args(i).eval(null)
     }
     val path = lit(0, "tablePath").toString
-    val query: Seq[Float] = (args(1).dataType, lit(1, "queryVec")) match {
-      case (org.apache.spark.sql.types.ArrayType(et, _),
-            a: org.apache.spark.sql.catalyst.util.ArrayData) => et match {
-        case org.apache.spark.sql.types.FloatType => a.toFloatArray().toSeq
-        case org.apache.spark.sql.types.DoubleType => a.toDoubleArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.IntegerType => a.toIntArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.LongType => a.toLongArray().map(_.toFloat).toSeq
-        case dt: org.apache.spark.sql.types.DecimalType => // array(0.1, …) literals
-          a.toObjectArray(dt).map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toFloat).toSeq
-        case other => throw new IllegalArgumentException(
-          s"graft_index_search: unsupported query element type $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "graft_index_search: queryVec must be a foldable numeric array")
-    }
+    val query = foldVec("graft_index_search", args(1))
     val k = lit(2, "k").asInstanceOf[Number].intValue()
     val nprobe = if (args.length >= 4) lit(3, "nprobe").asInstanceOf[Number].intValue() else -1
     val name = if (args.length >= 5) lit(4, "name").toString else "vec"
@@ -185,6 +171,24 @@ object GraftFunctions {
         s"$fn: queryVec must be a foldable numeric array")
     }
   }
+
+  /** A batch TVF's query table, collected at plan time (the SMALL side
+    * by contract) as (qid = key as long, numeric vector as floats).
+    */
+  private def queryBatch(spark: SparkSession, fn: String, qtable: String, keyCol: String,
+                         vecCol: String): Seq[(Long, Seq[Float])] =
+    spark.table(qtable).select(col(keyCol).cast("long"), col(vecCol)).collect().toSeq
+      .map { r =>
+        (r.getLong(0), r.getSeq[Any](1).map {
+          case f: Float => f
+          case d: Double => d.toFloat
+          case i: Int => i.toFloat
+          case l: Long => l.toFloat
+          case d: java.math.BigDecimal => d.floatValue()
+          case other => throw new IllegalArgumentException(
+            s"$fn: unsupported vector element $other")
+        })
+      }
 
   /** A numeric TVF argument as Double: SQL decimal literals (`0.6`)
     * eval to Spark's own Decimal, which is NOT a java.lang.Number —
@@ -390,21 +394,7 @@ object GraftFunctions {
       args(i).eval(null)
     }
     val path = lit(0, "tablePath").toString
-    val query: Seq[Float] = (args(1).dataType, lit(1, "queryVec")) match {
-      case (org.apache.spark.sql.types.ArrayType(et, _),
-            a: org.apache.spark.sql.catalyst.util.ArrayData) => et match {
-        case org.apache.spark.sql.types.FloatType => a.toFloatArray().toSeq
-        case org.apache.spark.sql.types.DoubleType => a.toDoubleArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.IntegerType => a.toIntArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.LongType => a.toLongArray().map(_.toFloat).toSeq
-        case dt: org.apache.spark.sql.types.DecimalType =>
-          a.toObjectArray(dt).map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toFloat).toSeq
-        case other => throw new IllegalArgumentException(
-          s"graft_hybrid_search: unsupported query element type $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "graft_hybrid_search: queryVec must be a foldable numeric array")
-    }
+    val query = foldVec("graft_hybrid_search", args(1))
     val textQuery = lit(2, "textQuery").toString
     val k = lit(3, "k").asInstanceOf[Number].intValue()
     val n = if (args.length >= 5) lit(4, "n").asInstanceOf[Number].intValue() else 50
@@ -532,19 +522,7 @@ object GraftFunctions {
     val m = graft.sources.GraftIndex.meta(path, name)
     val np = if (nprobe > 0) nprobe else m.nlist
     val key = m.keyCols.head
-    val qs = spark.table(qtable)
-      .select(col(key).cast("long"), col(m.vecCol)).collect().toSeq
-      .map { r =>
-        (r.getLong(0), r.getSeq[Any](1).map {
-          case f: Float => f
-          case d: Double => d.toFloat
-          case i: Int => i.toFloat
-          case l: Long => l.toFloat
-          case d: java.math.BigDecimal => d.floatValue()
-          case other => throw new IllegalArgumentException(
-            s"graft_knn_join: unsupported vector element $other")
-        })
-      }
+    val qs = queryBatch(spark, "graft_knn_join", qtable, key, m.vecCol)
     graft.sources.GraftIndex.knnJoin(spark, path, qs, k, np, name, pred = pred)
       .queryExecution.logical
   }
@@ -575,19 +553,7 @@ object GraftFunctions {
     val pred = if (args.length == 6) Some(parsePred(spark, "graft_hnsw_knn_join",
       lit(5, "predSql").toString)) else None
     val m = graft.sources.GraftHnsw.meta(path, name)
-    val qs = spark.table(qtable)
-      .select(col(m.keyCol).cast("long"), col(m.vecCol)).collect().toSeq
-      .map { r =>
-        (r.getLong(0), r.getSeq[Any](1).map {
-          case f: Float => f
-          case d: Double => d.toFloat
-          case i: Int => i.toFloat
-          case l: Long => l.toFloat
-          case d: java.math.BigDecimal => d.floatValue()
-          case other => throw new IllegalArgumentException(
-            s"graft_hnsw_knn_join: unsupported vector element $other")
-        })
-      }
+    val qs = queryBatch(spark, "graft_hnsw_knn_join", qtable, m.keyCol, m.vecCol)
     graft.sources.GraftHnsw.knnJoin(spark, path, qs, k, ef, name, pred = pred)
       .queryExecution.logical
   }
@@ -608,21 +574,7 @@ object GraftFunctions {
       args(i).eval(null)
     }
     val path = lit(0, "layoutPath").toString
-    val query: Seq[Float] = (args(1).dataType, lit(1, "queryVec")) match {
-      case (org.apache.spark.sql.types.ArrayType(et, _),
-            a: org.apache.spark.sql.catalyst.util.ArrayData) => et match {
-        case org.apache.spark.sql.types.FloatType => a.toFloatArray().toSeq
-        case org.apache.spark.sql.types.DoubleType => a.toDoubleArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.IntegerType => a.toIntArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.LongType => a.toLongArray().map(_.toFloat).toSeq
-        case dt: org.apache.spark.sql.types.DecimalType =>
-          a.toObjectArray(dt).map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toFloat).toSeq
-        case other => throw new IllegalArgumentException(
-          s"graft_hnsw_search: unsupported query element type $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "graft_hnsw_search: queryVec must be a foldable numeric array")
-    }
+    val query = foldVec("graft_hnsw_search", args(1))
     val k = lit(2, "k").asInstanceOf[Number].intValue()
     val ef = if (args.length == 4) lit(3, "ef").asInstanceOf[Number].intValue() else 64
     val spark = SparkSession.active
@@ -650,21 +602,7 @@ object GraftFunctions {
       args(i).eval(null)
     }
     val path = lit(0, "tablePath").toString
-    val query: Seq[Float] = (args(1).dataType, lit(1, "queryVec")) match {
-      case (org.apache.spark.sql.types.ArrayType(et, _),
-            a: org.apache.spark.sql.catalyst.util.ArrayData) => et match {
-        case org.apache.spark.sql.types.FloatType => a.toFloatArray().toSeq
-        case org.apache.spark.sql.types.DoubleType => a.toDoubleArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.IntegerType => a.toIntArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.LongType => a.toLongArray().map(_.toFloat).toSeq
-        case dt: org.apache.spark.sql.types.DecimalType =>
-          a.toObjectArray(dt).map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toFloat).toSeq
-        case other => throw new IllegalArgumentException(
-          s"graft_hnsw_probe: unsupported query element type $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "graft_hnsw_probe: queryVec must be a foldable numeric array")
-    }
+    val query = foldVec("graft_hnsw_probe", args(1))
     val k = lit(2, "k").asInstanceOf[Number].intValue()
     val ef = if (args.length >= 4) lit(3, "ef").asInstanceOf[Number].intValue() else 64
     val name = if (args.length >= 5) lit(4, "name").toString else "hnsw"

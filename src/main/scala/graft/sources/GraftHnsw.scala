@@ -65,53 +65,47 @@ import graft.operators.HnswIndex
   * probe lifecycle against brute force at a wide beam (the HnswSpec
   * convention) plus the tombstone lineage rules exactly.
   */
-object GraftHnsw {
+object GraftHnsw extends AttachedIndex.Family {
+  type M = HnswMeta
+  val dir = "_hnswidx"
+  val noun = "HNSW index"
+  val defaultName = "hnsw"
+  val sqlPrefix = "hnsw"
 
   final case class HnswMeta(name: String, vecCol: String, keyCol: String,
                             metric: String, m: Int, efConstruction: Int,
                             indexedVersion: Int, gen: Int,
                             segs: Seq[Int], tombs: Seq[String],
-                            storage: String = "float32")
+                            storage: String = "float32") extends AttachedIndex.Meta {
+    def family: AttachedIndex.Family = GraftHnsw
+    def columns: Seq[String] = Seq(vecCol, keyCol)
+    private[sources] def report = ("hnsw", vecCol, metric, m)
+    private[sources] def fields =
+      Seq("vecCol" -> vecCol, "keyCol" -> keyCol, "metric" -> metric, "m" -> m.toString,
+        "efc" -> efConstruction.toString, "indexedVersion" -> indexedVersion.toString,
+        "gen" -> gen.toString, "segs" -> segs.mkString(","), "tombs" -> tombs.mkString(","),
+        "storage" -> storage)
+  }
 
-  private def root(tablePath: String, name: String) = s"$tablePath/_hnswidx/$name"
+  protected def decode(name: String, kv: Map[String, String]): HnswMeta =
+    HnswMeta(name, kv("vecCol"), kv("keyCol"), kv("metric"), kv("m").toInt,
+      kv("efc").toInt, kv("indexedVersion").toInt, kv("gen").toInt,
+      kv("segs").split(",").filter(_.nonEmpty).map(_.toInt).toSeq,
+      kv("tombs").split(",").filter(_.nonEmpty).toSeq,
+      kv.getOrElse("storage", "float32")) // pre-quantization metas: float32
+
+  protected def pinnedAt(m: HnswMeta, version: Int): HnswMeta = m.copy(indexedVersion = version)
+
+  private[sources] def refreshUpTo(spark: SparkSession, tablePath: String, name: String,
+                                   maxSegments: Int): Option[(Int, Int)] =
+    refresh(spark, tablePath, name, maxSegments)
+
   private def genRoot(tablePath: String, name: String, gen: Int) =
     s"${root(tablePath, name)}/g$gen"
   private def layoutPath(tablePath: String, name: String, gen: Int) =
     s"${genRoot(tablePath, name, gen)}/layout"
   private def tombsDir(tablePath: String, name: String, gen: Int) =
     s"${genRoot(tablePath, name, gen)}/tombs"
-  private def metaPath(tablePath: String, name: String) =
-    new Path(root(tablePath, name), "meta")
-
-  def exists(tablePath: String, name: String = "hnsw"): Boolean =
-    GraftTable.MetaIO.exists(metaPath(tablePath, name))
-
-  def meta(tablePath: String, name: String = "hnsw"): HnswMeta = {
-    val p = metaPath(tablePath, name)
-    require(GraftTable.MetaIO.exists(p), s"no hnsw index '$name' at $tablePath")
-    val kv = GraftTable.MetaIO.readString(p).split("\n")
-      .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
-    HnswMeta(name, kv("vecCol"), kv("keyCol"), kv("metric"), kv("m").toInt,
-      kv("efc").toInt, kv("indexedVersion").toInt, kv("gen").toInt,
-      kv("segs").split(",").filter(_.nonEmpty).map(_.toInt).toSeq,
-      kv("tombs").split(",").filter(_.nonEmpty).toSeq,
-      kv.getOrElse("storage", "float32")) // pre-quantization metas: float32
-  }
-
-  /** All HNSW indexes on the table (name-sorted metas); unreadable
-    * subdirs (crashed half-creates with no meta yet) are skipped.
-    */
-  def list(tablePath: String): Seq[HnswMeta] =
-    GraftTable.MetaIO.list(new Path(tablePath, "_hnswidx"))
-      .filter(_.isDirectory).map(_.getPath.getName).sorted
-      .flatMap(n => scala.util.Try(meta(tablePath, n)).toOption)
-
-  private def writeMeta(tablePath: String, m: HnswMeta): Unit =
-    GraftTable.MetaIO.replaceString(metaPath(tablePath, m.name),
-      s"vecCol=${m.vecCol}\nkeyCol=${m.keyCol}\nmetric=${m.metric}\nm=${m.m}\n" +
-        s"efc=${m.efConstruction}\nindexedVersion=${m.indexedVersion}\n" +
-        s"gen=${m.gen}\nsegs=${m.segs.mkString(",")}\ntombs=${m.tombs.mkString(",")}\n" +
-        s"storage=${m.storage}")
 
   /** Committed-or-not pids currently on disk for a generation's layout. */
   private def pidsOnDisk(spark: SparkSession, tablePath: String, name: String,
@@ -156,14 +150,12 @@ object GraftHnsw {
              name: String = "hnsw", m: Int = 16, efConstruction: Int = 100,
              metric: String = "cosine", nSegments: Int = 4,
              storage: String = "float32"): Unit = {
-    val v = GraftTable.latestVersion(tablePath)
-    require(v >= 0, s"no table at $tablePath")
-    require(!exists(tablePath, name), s"hnsw index '$name' already exists at $tablePath")
+    val v = pinForCreate(tablePath, name)
     val keyCol = keyColOf(tablePath, v)
     val snap = GraftTable.read(spark, tablePath, v).filter(col(vecCol).isNotNull)
     HnswIndex.build(snap, keyCol, vecCol, layoutPath(tablePath, name, 0),
       m, efConstruction, metric, nSegments, storage)
-    writeMeta(tablePath, HnswMeta(name, vecCol, keyCol, metric, m, efConstruction,
+    commit(tablePath, HnswMeta(name, vecCol, keyCol, metric, m, efConstruction,
       v, gen = 0, segs = pidsOnDisk(spark, tablePath, name, 0), tombs = Nil,
       storage = storage))
   }
@@ -191,51 +183,39 @@ object GraftHnsw {
   }
 
   private def refreshOnce(spark: SparkSession, tablePath: String,
-                          name: String): Option[(Int, Int)] = {
-    val m0 = meta(tablePath, name)
-    val head = GraftTable.latestVersion(tablePath)
-    if (head <= m0.indexedVersion) return None
-    val batch = GraftTable.changes(spark, tablePath, m0.indexedVersion, head)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+                          name: String): Option[(Int, Int)] =
+    refreshWith(spark, tablePath, name) { (m0, head, batch) =>
       val changedKeys = batch.select(col(m0.keyCol).cast("long").as("id")).distinct()
       val additions = batch.filter(!col("_deleted")).drop("_deleted")
         .filter(col(m0.vecCol).isNotNull)
-      if (changedKeys.isEmpty) {
-        // schema-only / no-op range: advance the pin, nothing flushes
-        writeMeta(tablePath, m0.copy(indexedVersion = head))
-        return Some((m0.indexedVersion, head))
+      // schema-only / no-op range: None — the pin advances, nothing flushes
+      if (changedKeys.isEmpty) None
+      else {
+        val model = HnswIndex.load(spark, layoutPath(tablePath, name, m0.gen))
+        // horizon BEFORE the append: every copy in a segment older than
+        // the new base is dead for a changed key; the fresh copies land
+        // at pid >= base and survive the filter. With no additions the
+        // horizon is one past the newest pid on disk (orphans included —
+        // a committed pid never exceeds it).
+        val (newSegs, horizon) =
+          if (additions.isEmpty)
+            (Seq.empty[Int],
+              pidsOnDisk(spark, tablePath, name, m0.gen).maxOption.fold(0)(_ + 1))
+          else {
+            val base = HnswIndex.append(spark, model, additions, m0.keyCol, m0.vecCol)
+            (pidsOnDisk(spark, tablePath, name, m0.gen).filter(_ >= base), base)
+          }
+        // attempt-unique tombstone file: a crashed refresh's file is
+        // invisible (not meta-listed) and never half-reused
+        val tombName = s"t${AttachedIndex.token()}"
+        changedKeys.withColumn("horizon", lit(horizon)).coalesce(1)
+          .write.mode("overwrite")
+          .parquet(s"${tombsDir(tablePath, name, m0.gen)}/$tombName")
+        // segments, tombstone, and version pin commit together
+        Some(m0.copy(indexedVersion = head,
+          segs = m0.segs ++ newSegs, tombs = m0.tombs :+ tombName))
       }
-      val model = HnswIndex.load(spark, layoutPath(tablePath, name, m0.gen))
-      // horizon BEFORE the append: every copy in a segment older than
-      // the new base is dead for a changed key; the fresh copies land
-      // at pid >= base and survive the filter. With no additions the
-      // horizon is one past the newest pid on disk (orphans included —
-      // a committed pid never exceeds it).
-      val (newSegs, horizon) =
-        if (additions.isEmpty)
-          (Seq.empty[Int],
-            pidsOnDisk(spark, tablePath, name, m0.gen).maxOption.fold(0)(_ + 1))
-        else {
-          val base = HnswIndex.append(spark, model, additions, m0.keyCol, m0.vecCol)
-          (pidsOnDisk(spark, tablePath, name, m0.gen).filter(_ >= base), base)
-        }
-      // attempt-unique tombstone file: a crashed refresh's file is
-      // invisible (not meta-listed) and never half-reused
-      val tombName = s"t${java.util.UUID.randomUUID.toString.take(8)}"
-      changedKeys.withColumn("horizon", lit(horizon)).coalesce(1)
-        .write.mode("overwrite")
-        .parquet(s"${tombsDir(tablePath, name, m0.gen)}/$tombName")
-      // THE commit point: segments, tombstone, and version pin swap
-      // together or not at all
-      writeMeta(tablePath, m0.copy(indexedVersion = head,
-        segs = m0.segs ++ newSegs, tombs = m0.tombs :+ tombName))
-      Some((m0.indexedVersion, head))
-    } finally {
-      batch.unpersist(blocking = false)
-      ()
     }
-  }
 
   /** Full re-flush into a fresh generation at the table head — the
     * merge/compaction step: one graph build per segment over the live
@@ -253,7 +233,7 @@ object GraftHnsw {
     val nSeg = nSegments.getOrElse(math.max(1, m0.segs.length))
     HnswIndex.build(snap, m0.keyCol, m0.vecCol, layoutPath(tablePath, name, newGen),
       m0.m, m0.efConstruction, m0.metric, nSeg, m0.storage)
-    writeMeta(tablePath, m0.copy(indexedVersion = head, gen = newGen,
+    commit(tablePath, m0.copy(indexedVersion = head, gen = newGen,
       segs = pidsOnDisk(spark, tablePath, name, newGen), tombs = Nil))
   }
 
@@ -304,15 +284,7 @@ object GraftHnsw {
     val keep = m0.segs.diff(mergeSet)
     val model = HnswIndex.load(spark, lp)
     val rows = HnswIndex.segmentRows(spark, model, mergeSet.toSet)
-    val live = (if (m0.tombs.isEmpty) rows
-      else {
-        val tombs = spark.read.parquet(
-            m0.tombs.map(t => s"${tombsDir(tablePath, name, m0.gen)}/$t"): _*)
-          .groupBy("id").agg(max("horizon").as("__hz"))
-        rows.join(broadcast(tombs), Seq("id"), "left")
-          .filter(col("__hz").isNull || col("pid") >= col("__hz"))
-          .drop("__hz")
-      }).drop("pid")
+    val live = liveCandidates(spark, tablePath, m0, rows).drop("pid")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the horizon rule leaves at most ONE live copy per key; a
@@ -337,7 +309,7 @@ object GraftHnsw {
           .agg(max("horizon")).head().getInt(0)
         h > minPid
       }
-      writeMeta(tablePath, m0.copy(segs = newSegs, tombs = keptTombs))
+      commit(tablePath, m0.copy(segs = newSegs, tombs = keptTombs))
       Some((mergeSet, newSegs.diff(keep).headOption.getOrElse(-1)))
     } finally {
       live.unpersist(blocking = false)
@@ -373,7 +345,6 @@ object GraftHnsw {
               bruteForceCap: Int = 10000, acceptCap: Int = 1000000): DataFrame = {
     val m = meta(tablePath, name)
     requireFresh(tablePath, m, allowStale)
-    import spark.implicits._
     // the internal graph id is long; emit the key in the TABLE's key
     // type (as joinBack does) so int-keyed tables don't get bigint back
     val keyType = GraftTable.snapshotSchema(tablePath, m.indexedVersion)
@@ -382,47 +353,22 @@ object GraftHnsw {
     if (pred.isDefined)
       return knnJoinFiltered(spark, tablePath, m, queries, k, ef, pred.get,
         rerankFactor, bruteForceCap, acceptCap, keyType)
-    if (m.segs.isEmpty)
-      return Seq.empty[(Long, Long, Double)].toDF("qid", m.keyCol, "score")
-        .withColumn(m.keyCol, col(m.keyCol).cast(keyType))
-        .select("qid", m.keyCol, "score")
+    if (m.segs.isEmpty) return emptyPairs(spark, m, keyType)
     val model = HnswIndex.load(spark, layoutPath(tablePath, name, m.gen))
+    val qs = queries.map { case (qid, v) => (qid, v.toArray) }
     if (m.storage == "float32") {
-      val cands = HnswIndex.probeSegmentsWithPid(spark, model,
-        queries.map { case (qid, v) => (qid, v.toArray) }, k, ef, Some(m.segs.toSet))
+      val cands = HnswIndex.probeSegmentsWithPid(spark, model, qs, k, ef, Some(m.segs.toSet))
       val live = liveCandidates(spark, tablePath, m, cands)
         .select(col("qid"), col("id").cast(keyType).as(m.keyCol), col("score"))
       graft.operators.VectorSearch.perQueryTopK(live, "qid", m.keyCol, k, m.metric)
     } else {
       // quantized layout: widen the per-(query, segment) frontier, then
-      // exact-score every surviving (qid, key) pair from the table's
-      // float column before the bounded-heap per-query cut — one
-      // bucket-pruned lookup serves ALL queries' candidates (the pair
-      // set is ≤ |Q|·|segs|·rerankFactor·k rows, serving-sized)
-      require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-      val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
-      val cands = HnswIndex.probeSegmentsWithPid(spark, model,
-        queries.map { case (qid, v) => (qid, v.toArray) }, kf, ef, Some(m.segs.toSet))
-      val pairs = liveCandidates(spark, tablePath, m, cands)
-        .select("qid", "id").distinct()
-      val frontier = pairs.select("id").distinct().collect().map(_.getLong(0))
-      if (frontier.isEmpty)
-        return Seq.empty[(Long, Long, Double)].toDF("qid", m.keyCol, "score")
-          .withColumn(m.keyCol, col(m.keyCol).cast(keyType))
-          .select("qid", m.keyCol, "score")
-      val qdf = queries.toDF("qid", "__qvec")
-      // select, not withColumn+drop: the table's key may itself be
-      // named "id" (the graph's internal id column name)
-      val probeSide = broadcast(
-        pairs.select(col("qid"), col("id").cast(keyType).as(m.keyCol))
-          .join(qdf, "qid"))
-      val scored = candidateRows(spark, tablePath, m, frontier)
-        .select(col(m.keyCol), col(m.vecCol))
-        .join(probeSide, Seq(m.keyCol))
-        .withColumn("score", graft.operators.VectorSearch.scoreCol(
-          col(m.vecCol), col("__qvec"), m.metric))
-        .select(col("qid"), col(m.keyCol), col("score"))
-      graft.operators.VectorSearch.perQueryTopK(scored, "qid", m.keyCol, k, m.metric)
+      // exact-score the surviving pairs (≤ |Q|·|segs|·rerankFactor·k)
+      val cands = HnswIndex.probeSegmentsWithPid(spark, model, qs,
+        AttachedIndex.frontierSize(k, rerankFactor), ef, Some(m.segs.toSet))
+      rerankPairs(spark, tablePath, m,
+        liveCandidates(spark, tablePath, m, cands).select("qid", "id").distinct(),
+        queries, k, keyType)
     }
   }
 
@@ -437,50 +383,43 @@ object GraftHnsw {
                               pred: Column, rerankFactor: Int, bruteForceCap: Int,
                               acceptCap: Int,
                               keyType: org.apache.spark.sql.types.DataType): DataFrame = {
-    require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
+    val kf = AttachedIndex.frontierSize(k, rerankFactor)
+    if (queries.isEmpty) return emptyPairs(spark, m, keyType)
+    val matched = AttachedIndex.matching(spark, tablePath, m.indexedVersion, pred, m.vecCol)
+    val n = matchCount(spark, tablePath, m, matched, pred, bruteForceCap, acceptCap)
+    if (n == 0) return emptyPairs(spark, m, keyType)
+    if (n <= bruteForceCap || m.segs.isEmpty)
+      return AttachedIndex.bruteForceKnn(spark, queries, matched, Seq(m.keyCol),
+        m.vecCol, m.metric, k)
+    val live = filteredWalk(spark, tablePath, m,
+      queries.map { case (qid, v) => (qid, v.toArray) }, kf, ef, matched, n, acceptCap)
+    rerankPairs(spark, tablePath, m, live.select("qid", "id").distinct(), queries, k, keyType)
+  }
+
+  /** The batch shape's empty result: (qid, key, score). */
+  private def emptyPairs(spark: SparkSession, m: HnswMeta,
+                         keyType: org.apache.spark.sql.types.DataType): DataFrame = {
     import spark.implicits._
-    def empty = Seq.empty[(Long, Long, Double)].toDF("qid", m.keyCol, "score")
+    Seq.empty[(Long, Long, Double)].toDF("qid", m.keyCol, "score")
       .withColumn(m.keyCol, col(m.keyCol).cast(keyType))
       .select("qid", m.keyCol, "score")
-    if (queries.isEmpty) return empty
-    val matched = GraftTable.read(spark, tablePath, m.indexedVersion)
-      .filter(pred).filter(col(m.vecCol).isNotNull)
-    val n = matchCount(spark, tablePath, m, matched, pred, bruteForceCap, acceptCap)
-    if (n == 0) return empty
-    val qdf = queries.toDF("qid", "__qvec")
-    if (n <= bruteForceCap || m.segs.isEmpty) {
-      // exact: broadcast the filtered subset once, score every
-      // (query, match) pair — ≤ |Q|·bruteForceCap rows, bounded
-      val scored = qdf.crossJoin(broadcast(
-          matched.select(col(m.keyCol).as("__mkey"), col(m.vecCol).as("__mvec"))))
-        .withColumn("score", graft.operators.VectorSearch.scoreCol(
-          col("__mvec"), col("__qvec"), m.metric))
-        .select(col("qid"), col("__mkey").cast(keyType).as(m.keyCol), col("score"))
-      return graft.operators.VectorSearch.perQueryTopK(scored, "qid", m.keyCol, k, m.metric)
-    }
-    val model = HnswIndex.load(spark, layoutPath(tablePath, m.name, m.gen))
-    val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
-    val acceptIds: Option[Array[Long]] =
-      if (n <= acceptCap) {
-        val arr = matched.select(col(m.keyCol).cast("long")).distinct()
-          .collect().map(_.getLong(0))
-        java.util.Arrays.sort(arr)
-        Some(arr)
-      } else None
-    val cands = HnswIndex.probeSegmentsWithPid(spark, model,
-      queries.map { case (qid, v) => (qid, v.toArray) }, kf, ef,
-      Some(m.segs.toSet), acceptIds)
-    var pairs = liveCandidates(spark, tablePath, m, cands)
-      .select("qid", "id").distinct()
-    if (acceptIds.isEmpty)
-      pairs = pairs.join(
-        matched.select(col(m.keyCol).cast("long").as("id")).distinct(),
-        Seq("id"), "left_semi")
+  }
+
+  /** Exact-score distinct (qid, id) candidate pairs on the table's
+    * float column — one point lookup serves ALL queries — then the
+    * bounded-heap per-query cut.
+    */
+  private def rerankPairs(spark: SparkSession, tablePath: String, m: HnswMeta,
+                          pairs: DataFrame, queries: Seq[(Long, Seq[Float])], k: Int,
+                          keyType: org.apache.spark.sql.types.DataType): DataFrame = {
+    import spark.implicits._
     val frontier = pairs.select("id").distinct().collect().map(_.getLong(0))
-    if (frontier.isEmpty) return empty
+    if (frontier.isEmpty) return emptyPairs(spark, m, keyType)
+    // select, not withColumn+drop: the table's key may itself be
+    // named "id" (the graph's internal id column name)
     val probeSide = broadcast(
       pairs.select(col("qid"), col("id").cast(keyType).as(m.keyCol))
-        .join(qdf, "qid"))
+        .join(queries.toDF("qid", "__qvec"), "qid"))
     val scored = candidateRows(spark, tablePath, m, frontier)
       .select(col(m.keyCol), col(m.vecCol))
       .join(probeSide, Seq(m.keyCol))
@@ -490,29 +429,26 @@ object GraftHnsw {
     graft.operators.VectorSearch.perQueryTopK(scored, "qid", m.keyCol, k, m.metric)
   }
 
-  /** Continuous maintenance: a Structured Streaming ticker drives
-    * [[refresh]] per micro-batch so the index FOLLOWS the table — the
-    * [[GraftIndex.streamRefresh]] twin for the graph index. Position is
-    * owned by `meta.indexedVersion` (restart-safe, replays idempotent:
-    * a re-applied change range re-tombstones the same keys and appends
-    * duplicate fresh copies whose max-horizon arbitration still serves
-    * exactly one).
+  /** The filtered walk's live candidates: ≤ `acceptCap` matches walk
+    * with a sorted accept set; past it, an unfiltered walk semi-joined
+    * to the match keys ([[probeFiltered]]).
     */
-  def streamRefresh(spark: SparkSession, tablePath: String, name: String = "hnsw",
-                    trigger: org.apache.spark.sql.streaming.Trigger =
-                      org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .writeStream
-      .foreachBatch { (_: DataFrame, _: Long) => refresh(spark, tablePath, name); () }
-      .trigger(trigger)
-      .start()
-
-  /** Drop the index entirely; false when absent (IF EXISTS contract). */
-  def drop(tablePath: String, name: String = "hnsw"): Boolean = {
-    val existed = exists(tablePath, name)
-    if (existed) GraftTable.MetaIO.delete(new Path(root(tablePath, name)))
-    existed
+  private def filteredWalk(spark: SparkSession, tablePath: String, m: HnswMeta,
+                           queries: Seq[(Long, Array[Float])], kf: Int, ef: Int,
+                           matched: DataFrame, n: Long, acceptCap: Int): DataFrame = {
+    val model = HnswIndex.load(spark, layoutPath(tablePath, m.name, m.gen))
+    val acceptIds: Option[Array[Long]] =
+      if (n <= acceptCap) {
+        val arr = matched.select(col(m.keyCol).cast("long")).distinct()
+          .collect().map(_.getLong(0))
+        java.util.Arrays.sort(arr)
+        Some(arr)
+      } else None
+    val live = liveCandidates(spark, tablePath, m, HnswIndex.probeSegmentsWithPid(
+      spark, model, queries, kf, ef, Some(m.segs.toSet), acceptIds))
+    if (acceptIds.isDefined) live
+    else live.join(matched.select(col(m.keyCol).cast("long").as("id")).distinct(),
+      Seq("id"), "left_semi")
   }
 
   /** The filtered paths' match count, metadata-first — the shared
@@ -528,15 +464,6 @@ object GraftHnsw {
                          bruteForceCap: Int, acceptCap: Int): Long =
     GraftTable.metadataMatchCount(spark, tablePath, m.indexedVersion, pred,
       Seq(m.vecCol), bruteForceCap, acceptCap)(matched.count())
-
-  private def requireFresh(tablePath: String, m: HnswMeta, allowStale: Boolean): Unit = {
-    val head = GraftTable.latestVersion(tablePath)
-    if (!allowStale && head != m.indexedVersion)
-      throw new IllegalStateException(
-        s"hnsw index '${m.name}' on $tablePath is STALE: it reflects table version " +
-          s"${m.indexedVersion} but the table is at $head — run GraftHnsw.refresh, " +
-          "or probe(allowStale = true) to serve the indexed snapshot")
-  }
 
   /** Candidates surviving the horizon tombstones: a candidate (id, pid)
     * dies iff some tombstone for its id has horizon > pid — i.e. the
@@ -560,50 +487,36 @@ object GraftHnsw {
     GraftTable.read(spark, tablePath, m.indexedVersion).limit(0)
       .withColumn("score", lit(0.0)).drop(m.vecCol)
 
-  /** Bucket-pruned point lookup of candidate keys' FULL table rows
-    * (vector column included) at the pinned version — the exact-rerank
-    * substrate for quantized layouts: n keys → ≤ n bucket reads, never
-    * a table scan.
+  /** The pinned snapshot's schema (create refuses tables without one). */
+  private def schemaOf(tablePath: String, m: HnswMeta) =
+    GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
+      throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
+
+  /** FULL table rows of graph ids (a long `__id` column plus any
+    * payload, e.g. a score) by the point lookup at the pinned version,
+    * the key in the TABLE's key type.
     */
+  private def rowsOf(spark: SparkSession, tablePath: String, m: HnswMeta,
+                     ids: DataFrame): DataFrame =
+    AttachedIndex.lookup(spark, tablePath, m.indexedVersion, Seq(m.keyCol),
+      ids.withColumn(m.keyCol, col("__id").cast(schemaOf(tablePath, m)(m.keyCol).dataType))
+        .drop("__id"))
+
   private def candidateRows(spark: SparkSession, tablePath: String, m: HnswMeta,
                             ids: Array[Long]): DataFrame = {
     import spark.implicits._
-    val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
-      throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
-    val keyType = sc(m.keyCol).dataType
-    val (_, defaultBuckets, _) = GraftTable.meta(tablePath)
-    val nb = GraftTable.bucketsAt(tablePath, m.indexedVersion, defaultBuckets)
-    val idsDf = ids.toSeq.toDF("__id")
-      .withColumn(m.keyCol, col("__id").cast(keyType)).drop("__id")
-    val buckets = idsDf
-      .select(GraftTable.bucketCol(Seq(m.keyCol), nb).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    GraftTable.readBuckets(spark, tablePath, m.indexedVersion, buckets)
-      .join(broadcast(idsDf), Seq(m.keyCol))
+    rowsOf(spark, tablePath, m, ids.toSeq.toDF("__id"))
   }
 
-  /** Payload join-back: the k result keys point-look-up their buckets
-    * at the PINNED table version (k keys → ≤ k bucket reads, never a
-    * scan), and the canonical probe shape comes out — table columns
-    * (snapshot order) minus the vector, score last.
+  /** Payload join-back of the k results, in the canonical probe shape —
+    * table columns (snapshot order) minus the vector, score last.
     */
   private def joinBack(spark: SparkSession, tablePath: String, m: HnswMeta,
                        top: Array[(Long, Double)]): DataFrame = {
     if (top.isEmpty) return emptyShaped(spark, tablePath, m)
     import spark.implicits._
-    val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
-      throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
-    val keyType = sc(m.keyCol).dataType
-    val (_, defaultBuckets, _) = GraftTable.meta(tablePath)
-    val nb = GraftTable.bucketsAt(tablePath, m.indexedVersion, defaultBuckets)
-    val idsDf = top.toSeq.toDF("__id", "score")
-      .withColumn(m.keyCol, col("__id").cast(keyType)).drop("__id")
-    val buckets = idsDf
-      .select(GraftTable.bucketCol(Seq(m.keyCol), nb).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val rows = GraftTable.readBuckets(spark, tablePath, m.indexedVersion, buckets)
-    val canonical = sc.fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
-    rows.join(broadcast(idsDf), Seq(m.keyCol))
+    val canonical = schemaOf(tablePath, m).fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
+    rowsOf(spark, tablePath, m, top.toSeq.toDF("__id", "score"))
       .select(canonical.map(col): _*)
   }
 
@@ -650,23 +563,27 @@ object GraftHnsw {
         .select("id", "score").collect().map(r => (r.getLong(0), r.getDouble(1)))
       joinBack(spark, tablePath, m, top)
     } else {
-      require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-      val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
       val cands = HnswIndex.probeSegmentsWithPid(spark, model,
-        Seq((0L, query.toArray)), kf, ef, Some(m.segs.toSet))
-      // frontier is ≤ |segs|·kf ids — serving-sized by construction
-      val frontier = liveCandidates(spark, tablePath, m, cands)
-        .select("id").distinct().collect().map(_.getLong(0))
-      if (frontier.isEmpty) return emptyShaped(spark, tablePath, m)
-      val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
-        throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
-      val exact = candidateRows(spark, tablePath, m, frontier)
-        .withColumn("score", graft.operators.VectorSearch.scoreCol(
-          col(m.vecCol), typedlit(query), m.metric))
-      val ord = if (m.metric == "l2") asc("score") else desc("score")
-      val canonical = sc.fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
-      exact.orderBy(ord, asc(m.keyCol)).limit(k).select(canonical.map(col): _*)
+        Seq((0L, query.toArray)), AttachedIndex.frontierSize(k, rerankFactor), ef,
+        Some(m.segs.toSet))
+      rerankTopK(spark, tablePath, m, liveCandidates(spark, tablePath, m, cands), query, k)
     }
+  }
+
+  /** Exact top-k of live walk candidates (≤ |segs|·kf ids), scored on
+    * the TABLE's float column, in the canonical probe shape.
+    */
+  private def rerankTopK(spark: SparkSession, tablePath: String, m: HnswMeta,
+                         live: DataFrame, query: Seq[Float], k: Int): DataFrame = {
+    val frontier = live.select("id").distinct().collect().map(_.getLong(0))
+    if (frontier.isEmpty) return emptyShaped(spark, tablePath, m)
+    val canonical = schemaOf(tablePath, m).fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
+    candidateRows(spark, tablePath, m, frontier)
+      .withColumn("score", graft.operators.VectorSearch.scoreCol(
+        col(m.vecCol), typedlit(query), m.metric))
+      .orderBy(if (m.metric == "l2") asc("score") else desc("score"), asc(m.keyCol))
+      .limit(k)
+      .select(canonical.map(col): _*)
   }
 
   /** DIVERSIFIED top-k through the table-attached HNSW — the
@@ -739,45 +656,16 @@ object GraftHnsw {
                             query: Seq[Float], k: Int, ef: Int, pred: Column,
                             rerankFactor: Int, bruteForceCap: Int,
                             acceptCap: Int): DataFrame = {
-    require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
+    val kf = AttachedIndex.frontierSize(k, rerankFactor)
     // bruteForceCap >= 0 and acceptCap >= bruteForceCap are enforced by
     // the shared matchCount ladder (GraftTable.metadataMatchCount)
-    val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
-      throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
-    val canonical = sc.fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
-    val ord = if (m.metric == "l2") asc("score") else desc("score")
-    val matched = GraftTable.read(spark, tablePath, m.indexedVersion)
-      .filter(pred).filter(col(m.vecCol).isNotNull)
+    val matched = AttachedIndex.matching(spark, tablePath, m.indexedVersion, pred, m.vecCol)
     val n = matchCount(spark, tablePath, m, matched, pred, bruteForceCap, acceptCap)
     if (n == 0) return emptyShaped(spark, tablePath, m)
     if (n <= bruteForceCap || m.segs.isEmpty)
-      return matched
-        .withColumn("score", graft.operators.VectorSearch.scoreCol(
-          col(m.vecCol), typedlit(query), m.metric))
-        .orderBy(ord, asc(m.keyCol)).limit(k)
-        .select(canonical.map(col): _*)
-    val model = HnswIndex.load(spark, layoutPath(tablePath, m.name, m.gen))
-    val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
-    val acceptIds: Option[Array[Long]] =
-      if (n <= acceptCap) {
-        val arr = matched.select(col(m.keyCol).cast("long")).distinct()
-          .collect().map(_.getLong(0))
-        java.util.Arrays.sort(arr)
-        Some(arr)
-      } else None
-    val cands = HnswIndex.probeSegmentsWithPid(spark, model,
-      Seq((0L, query.toArray)), kf, ef, Some(m.segs.toSet), acceptIds)
-    var live = liveCandidates(spark, tablePath, m, cands)
-    if (acceptIds.isEmpty)
-      live = live.join(
-        matched.select(col(m.keyCol).cast("long").as("id")).distinct(),
-        Seq("id"), "left_semi")
-    val frontier = live.select("id").distinct().collect().map(_.getLong(0))
-    if (frontier.isEmpty) return emptyShaped(spark, tablePath, m)
-    candidateRows(spark, tablePath, m, frontier)
-      .withColumn("score", graft.operators.VectorSearch.scoreCol(
-        col(m.vecCol), typedlit(query), m.metric))
-      .orderBy(ord, asc(m.keyCol)).limit(k)
-      .select(canonical.map(col): _*)
+      return AttachedIndex.bruteForceTopK(tablePath, m.indexedVersion, matched,
+        m.vecCol, m.keyCol, m.metric, query, k)
+    rerankTopK(spark, tablePath, m, filteredWalk(spark, tablePath, m,
+      Seq((0L, query.toArray)), kf, ef, matched, n, acceptCap), query, k)
   }
 }

@@ -72,7 +72,12 @@ import graft.operators.{IvfIndex, PqIndex}
   * `graft_index_exhaustive` / `vs_sql_index_tvf` CORRECTNESS rows and
   * GraftIndexSpec.
   */
-object GraftIndex {
+object GraftIndex extends AttachedIndex.Family {
+  type M = IndexMeta
+  val dir = "_index"
+  val noun = "vector index"
+  val defaultName = "vec"
+  val sqlPrefix = "index"
 
   /** `gen`: the layout generation the index serves — the manifest
     * `manifests/g<gen>` is the authoritative file set. None only for
@@ -87,7 +92,7 @@ object GraftIndex {
                              indexedVersion: Int, gen: Option[Int] = None,
                              modelGen: Option[Int] = None,
                              genToken: Option[String] = None,
-                             storage: String = "float32") {
+                             storage: String = "float32") extends AttachedIndex.Meta {
     /** The manifest file this meta serves from: `g<gen>` for build /
       * legacy-upgrade generations, `g<gen>-<token>` for refresh/rebuild
       * attempts. Meta naming the attempt-unique manifest is what makes
@@ -97,41 +102,38 @@ object GraftIndex {
       */
     def manifestName: Option[String] =
       gen.map(g => s"g$g" + genToken.fold("")("-" + _))
+    def family: AttachedIndex.Family = GraftIndex
+    def columns: Seq[String] = vecCol +: keyCols
+    private[sources] def report = (kind, vecCol, metric, nlist)
+    private[sources] def fields =
+      Seq("kind" -> kind, "vecCol" -> vecCol, "keyCols" -> keyCols.mkString(","),
+        "metric" -> metric, "nlist" -> nlist.toString,
+        "indexedVersion" -> indexedVersion.toString) ++
+        gen.map("gen" -> _.toString) ++ modelGen.map("modelGen" -> _.toString) ++
+        genToken.map("genToken" -> _) ++
+        (if (storage == "float32") None else Some("storage" -> storage))
   }
 
-  private def root(tablePath: String, name: String) = s"$tablePath/_index/$name"
-  private def dataPath(tablePath: String, name: String) = s"${root(tablePath, name)}/data"
-  private def modelPath(tablePath: String, name: String, modelGen: Option[Int]) =
-    s"${root(tablePath, name)}/${modelGen.fold("model")(g => s"model-g$g")}"
-  private def metaPath(tablePath: String, name: String) = new Path(root(tablePath, name), "meta")
-  private def manifestDir(tablePath: String, name: String) =
-    new Path(root(tablePath, name), "manifests")
-  private def manifestPath(tablePath: String, name: String, fileName: String) =
-    new Path(manifestDir(tablePath, name), fileName)
-
-  def exists(tablePath: String, name: String = "vec"): Boolean =
-    GraftTable.MetaIO.exists(metaPath(tablePath, name))
-
-  def meta(tablePath: String, name: String = "vec"): IndexMeta = {
-    val p = metaPath(tablePath, name)
-    require(GraftTable.MetaIO.exists(p), s"no index '$name' at $tablePath")
-    val kv = GraftTable.MetaIO.readString(p).split("\n")
-      .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+  protected def decode(name: String, kv: Map[String, String]): IndexMeta =
     IndexMeta(name, kv.getOrElse("kind", "ivf"), kv("vecCol"),
       kv("keyCols").split(",").toSeq, kv("metric"), kv("nlist").toInt,
       kv("indexedVersion").toInt, kv.get("gen").map(_.toInt),
       kv.get("modelGen").map(_.toInt), kv.get("genToken"),
       kv.getOrElse("storage", "float32")) // pre-quantization metas: float32
-  }
 
-  private def writeMeta(tablePath: String, m: IndexMeta): Unit =
-    GraftTable.MetaIO.replaceString(metaPath(tablePath, m.name),
-      s"kind=${m.kind}\nvecCol=${m.vecCol}\nkeyCols=${m.keyCols.mkString(",")}\n" +
-        s"metric=${m.metric}\nnlist=${m.nlist}\nindexedVersion=${m.indexedVersion}" +
-        m.gen.fold("")(g => s"\ngen=$g") +
-        m.modelGen.fold("")(g => s"\nmodelGen=$g") +
-        m.genToken.fold("")(t => s"\ngenToken=$t") +
-        (if (m.storage == "float32") "" else s"\nstorage=${m.storage}"))
+  protected def pinnedAt(m: IndexMeta, version: Int): IndexMeta = m.copy(indexedVersion = version)
+
+  private[sources] def refreshUpTo(spark: SparkSession, tablePath: String, name: String,
+                                   maxSegments: Int): Option[(Int, Int)] =
+    refresh(spark, tablePath, name)
+
+  private def dataPath(tablePath: String, name: String) = s"${root(tablePath, name)}/data"
+  private def modelPath(tablePath: String, name: String, modelGen: Option[Int]) =
+    s"${root(tablePath, name)}/${modelGen.fold("model")(g => s"model-g$g")}"
+  private def manifestDir(tablePath: String, name: String) =
+    new Path(root(tablePath, name), "manifests")
+  private def manifestPath(tablePath: String, name: String, fileName: String) =
+    new Path(manifestDir(tablePath, name), fileName)
 
   // ---- MVCC manifests: cell -> immutable data files ----------------------
 
@@ -297,9 +299,7 @@ object GraftIndex {
     // under it would be two lossy codecs pretending to be one
     require(kind == "ivf" || storage == "float32",
       s"storage '$storage' applies to kind = 'ivf' only; ivfpq already scans PQ codes")
-    val v = GraftTable.latestVersion(tablePath)
-    require(v >= 0, s"no table at $tablePath")
-    require(!exists(tablePath, name), s"index '$name' already exists at $tablePath")
+    val v = pinForCreate(tablePath, name)
     val keys = GraftTable.keyColumns(tablePath)
     val snap = GraftTable.read(spark, tablePath, v).filter(col(vecCol).isNotNull)
     if (kind == "ivf") {
@@ -314,7 +314,7 @@ object GraftIndex {
     }
     // generation 0 = the build's own files; meta lands LAST (commit point)
     writeManifest(tablePath, name, "g0", listGeneration(tablePath, name, ""), Some(0))
-    writeMeta(tablePath,
+    commit(tablePath,
       IndexMeta(name, kind, vecCol, keys, metric, nlist, v, Some(0), Some(0),
         storage = storage))
   }
@@ -340,7 +340,8 @@ object GraftIndex {
     val head = GraftTable.latestVersion(tablePath)
     val newModelGen = meta0.modelGen.getOrElse(-1) + 1
     val newGen = meta0.gen.getOrElse(-1) + 1
-    val genDir = s"g$newGen-${java.util.UUID.randomUUID.toString.take(8)}"
+    val token = AttachedIndex.token()
+    val genDir = s"g$newGen-$token"
     val layout = s"${dataPath(tablePath, name)}/$genDir"
     val newNlist = nlist.getOrElse(meta0.nlist)
     val snap = GraftTable.read(spark, tablePath, head).filter(col(meta0.vecCol).isNotNull)
@@ -358,13 +359,12 @@ object GraftIndex {
       saveModel(spark, tablePath, name, model.coarse, Some(model.codebooks), model.rot,
         Some(newModelGen))
     }
-    val token = genDir.stripPrefix(s"g$newGen-")
     writeManifest(tablePath, name, genDir, listGeneration(tablePath, name, genDir),
       Some(newModelGen))
     // THE commit point: layout generation, model generation, and
     // version pin flip together — and meta names THIS attempt's
     // manifest, so a racing maintainer can't mix-and-match
-    writeMeta(tablePath, meta0.copy(nlist = newNlist, indexedVersion = head,
+    commit(tablePath, meta0.copy(nlist = newNlist, indexedVersion = head,
       gen = Some(newGen), modelGen = Some(newModelGen), genToken = Some(token)))
   }
 
@@ -377,43 +377,36 @@ object GraftIndex {
     * The write target is disjoint from the read set, so no
     * materialization barrier is needed, concurrent probes keep serving
     * the old generation untorn, and a crash anywhere before the final
-    * meta swap leaves the committed state untouched (the retry
-    * overwrites the orphan generation). For ivfpq, additions are
-    * PQ-encoded with the EXISTING codebooks (the append discipline: no
-    * refit; periodic rebuild handles distribution drift).
+    * meta swap leaves the committed state untouched (the retry writes
+    * a new attempt-named generation; the orphan is [[vacuum]] garbage).
+    * For ivfpq, additions are PQ-encoded with the EXISTING codebooks
+    * (the append discipline: no refit; periodic rebuild handles
+    * distribution drift).
     *
     * Run ONE refresher per index (the [[ChangeFeed]] one-cursor-per-
     * consumer discipline): refresh is idempotent against crashes and
-    * replays. Two CONCURRENT refreshers cannot corrupt the index: each
-    * attempt writes its own uniquely-suffixed generation dir AND its
-    * own attempt-named manifest (`g<gen>-<token>`), and the meta swap
-    * names that manifest — so whichever swap lands last commits its own
-    * self-consistent (version pin, manifest, files) triple, never a mix
-    * of two attempts. The loser's generation is orphan garbage for
-    * [[vacuum]]. The single-refresher discipline remains the efficient
-    * mode (racing refreshers duplicate work); it is no longer a
-    * correctness requirement. [[streamRefresh]] gives the
-    * single-refresher loop a lifecycle.
+    * replays. Two CONCURRENT refreshers do not corrupt the index
+    * either: each attempt writes its own uniquely-suffixed generation
+    * dir AND its own attempt-named manifest (`g<gen>-<token>`), and the
+    * meta swap — an atomic rename of an attempt-private temp file
+    * ([[GraftTable.MetaIO.replaceString]]) — names that manifest, so
+    * whichever swap lands last commits its own self-consistent (version
+    * pin, manifest, files) triple. Its pin may be the older of the two;
+    * the next refresh folds the gap. The loser's generation is orphan
+    * garbage for [[vacuum]]. The single-refresher discipline remains the
+    * efficient mode (racing refreshers duplicate work).
+    * [[streamRefresh]] gives the single-refresher loop a lifecycle.
     */
   def refresh(spark: SparkSession, tablePath: String,
-              name: String = "vec"): Option[(Int, Int)] = {
-    val m0 = meta(tablePath, name)
-    val head = GraftTable.latestVersion(tablePath)
-    if (head <= m0.indexedVersion) return None
-    // legacy (pre-MVCC) index: adopt the current layout as generation 0
-    val m = m0.gen.fold {
-      writeManifest(tablePath, name, "g0", listGeneration(tablePath, name, ""), m0.modelGen)
-      val up = m0.copy(gen = Some(0)); writeMeta(tablePath, up); up
-    }(_ => m0)
-    val curGen = m.gen.get
-    val curManifest = readManifest(tablePath, name, m.manifestName.get)
-    val curFiles = absFiles(tablePath, name, curManifest)
-    val model = loadModel(spark, tablePath, m, Some(curFiles))
-    val cell = model.fold(IvfIndex.cellUdf(spark, _), PqIndex.cellUdf(spark, _))
-    val data = dataPath(tablePath, name)
-    val batch = GraftTable.changes(spark, tablePath, m.indexedVersion, head)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+              name: String = "vec"): Option[(Int, Int)] =
+    refreshWith(spark, tablePath, name) { (m, head, batch) =>
+      // a legacy (pre-MVCC) index serves its build generation unlisted
+      val curManifest = m.manifestName.fold(listGeneration(tablePath, name, ""))(
+        readManifest(tablePath, name, _))
+      val curFiles = absFiles(tablePath, name, curManifest)
+      val model = loadModel(spark, tablePath, m, Some(curFiles))
+      val cell = model.fold(IvfIndex.cellUdf(spark, _), PqIndex.cellUdf(spark, _))
+      val data = dataPath(tablePath, name)
       val changedKeys = batch.select(m.keyCols.map(col): _*).distinct()
       val oldCells = GraftTable.read(spark, tablePath, m.indexedVersion)
         .join(changedKeys, m.keyCols, "left_semi")
@@ -431,79 +424,45 @@ object GraftIndex {
         pq => PqIndex.encodeBatch(pq, newRows, m.vecCol))
       val newCells = additions.select("cluster_id").distinct().collect().map(_.getInt(0))
       val affected = (oldCells ++ newCells).distinct.toSeq
-      if (affected.isEmpty) {
-        // nothing indexed changed (e.g. all changed rows have null
-        // vectors): advance the version pin, keep the generation
-        writeMeta(tablePath, m.copy(indexedVersion = head))
-        return Some((m.indexedVersion, head))
+      // nothing indexed changed (e.g. all changed rows have null
+      // vectors): None — the version pin advances, the generation (or
+      // a legacy index's unlisted layout) stays
+      if (affected.isEmpty) None
+      else {
+        // a legacy index adopts its current layout as generation 0
+        if (m.gen.isEmpty)
+          writeManifest(tablePath, name, "g0", curManifest, m.modelGen)
+        val newGen = m.gen.getOrElse(0) + 1
+        // unique attempt suffix, like the table's data dirs: a crashed
+        // attempt's dir is never half-reused, and racing refreshers
+        // never write into each other's dirs
+        val token = AttachedIndex.token()
+        val genDir = s"g$newGen-$token"
+        // scan with the CURRENT (head) snapshot schema so the rewrite
+        // pads evolved columns for kept rows instead of dropping them
+        val headSchema = layoutSchema(tablePath, m.copy(indexedVersion = head))
+        val kept =
+          if (curManifest.isEmpty) additions.limit(0) // emptied layout: rebuild from additions
+          else IvfIndex.scanLayout(spark, headSchema, Some(curFiles), data)
+            .filter(col("cluster_id").isin(affected: _*)) // file-index-pruned
+            .join(changedKeys, m.keyCols, "left_anti")
+        // allowMissingColumns: additive table evolution — older index
+        // rows read the new columns as null, like the table itself
+        kept.unionByName(additions, allowMissingColumns = true)
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("cluster_id").parquet(s"$data/$genDir")
+        // a cell whose rows were all deleted writes no partition dir and
+        // simply leaves the manifest; untouched cells carry their files over
+        val rewritten = listGeneration(tablePath, name, genDir)
+        val affectedSet = affected.toSet
+        writeManifest(tablePath, name, genDir,
+          curManifest.view.filterKeys(!affectedSet(_)).toMap ++ rewritten, m.modelGen)
+        // the commit names THIS attempt's manifest file (g<gen>-<token>),
+        // so a racing refresher's swap commits ITS OWN self-consistent
+        // (version, manifest) pair — never a mix of the two attempts
+        Some(m.copy(indexedVersion = head, gen = Some(newGen), genToken = Some(token)))
       }
-      val newGen = curGen + 1
-      // unique attempt suffix, like the table's data dirs: a crashed
-      // attempt's dir is never half-reused (the retry gets a fresh
-      // token and orphans are vacuumed), and two refreshers racing
-      // against the single-maintainer discipline can no longer clobber
-      // each other's files — each writes its own dir and the last meta
-      // swap wins with a self-consistent file set
-      val genDir = s"g$newGen-${java.util.UUID.randomUUID.toString.take(8)}"
-      // scan with the CURRENT (head) snapshot schema so the rewrite
-      // pads evolved columns for kept rows instead of dropping them
-      val headSchema = layoutSchema(tablePath, m.copy(indexedVersion = head))
-      val kept =
-        if (curManifest.isEmpty) additions.limit(0) // emptied layout: rebuild from additions
-        else IvfIndex.scanLayout(spark, headSchema, Some(curFiles), data)
-          .filter(col("cluster_id").isin(affected: _*)) // file-index-pruned
-          .join(changedKeys, m.keyCols, "left_anti")
-      // allowMissingColumns: additive table evolution — older index
-      // rows read the new columns as null, like the table itself
-      kept.unionByName(additions, allowMissingColumns = true)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("cluster_id").parquet(s"$data/$genDir")
-      // a cell whose rows were all deleted writes no partition dir and
-      // simply leaves the manifest; untouched cells carry their files over
-      val rewritten = listGeneration(tablePath, name, genDir)
-      val affectedSet = affected.toSet
-      writeManifest(tablePath, name, genDir,
-        curManifest.view.filterKeys(!affectedSet(_)).toMap ++ rewritten, m.modelGen)
-      // THE commit point: generation + version pin swap atomically, and
-      // meta names THIS attempt's manifest file (g<gen>-<token>), so a
-      // racing refresher's swap commits ITS OWN self-consistent
-      // (version, manifest) pair — never a mix of the two attempts
-      writeMeta(tablePath, m.copy(indexedVersion = head, gen = Some(newGen),
-        genToken = Some(genDir.stripPrefix(s"g$newGen-"))))
-      Some((m.indexedVersion, head))
-    } finally {
-      batch.unpersist(blocking = false)
-      ()
     }
-  }
-
-  /** Reclaim unreferenced layout files: keep the manifests of the
-    * newest `keepGens` committed generations (always including the
-    * current one — pinned probes planned against kept generations stay
-    * servable), delete every data file no kept manifest references,
-    * drop emptied cell/generation dirs, orphan (uncommitted) generation
-    * dirs, and dropped manifests. Returns the number of data files
-    * deleted. Same single-maintainer discipline as [[refresh]]: do not
-    * vacuum while a refresh is in flight.
-    */
-  /** Drop index `name` entirely (its whole `_index/<name>` tree —
-    * data, models, manifests, meta). False when absent (the IF EXISTS
-    * contract). The table is untouched: an index is derived state.
-    */
-  def drop(tablePath: String, name: String = "vec"): Boolean = {
-    val existed = exists(tablePath, name)
-    if (existed) GraftTable.MetaIO.delete(new Path(root(tablePath, name)))
-    existed
-  }
-
-  /** All indexes on the table, name-sorted — each `_index/<name>` dir
-    * with a committed meta (a dir without one is an in-flight or
-    * aborted create and is not reported as servable).
-    */
-  def list(tablePath: String): Seq[IndexMeta] =
-    GraftTable.MetaIO.list(new Path(tablePath, "_index"))
-      .filter(_.isDirectory).map(_.getPath.getName).sorted
-      .filter(n => exists(tablePath, n)).map(n => meta(tablePath, n))
 
   /** Metadata-only count of the IVF family's reclaimable layout debt:
     * manifest files other than the one meta serves (older committed
@@ -530,6 +489,15 @@ object GraftIndex {
     }
   }
 
+  /** Reclaim unreferenced layout files: keep the manifests of the
+    * newest `keepGens` committed generations (always including the
+    * current one — pinned probes planned against kept generations stay
+    * servable), delete every data file no kept manifest references,
+    * drop emptied cell/generation dirs, orphan (uncommitted) generation
+    * dirs, and dropped manifests. Returns the number of data files
+    * deleted. Same single-maintainer discipline as [[refresh]]: do not
+    * vacuum while a refresh is in flight.
+    */
   def vacuum(tablePath: String, name: String = "vec", keepGens: Int = 1): Int = {
     require(keepGens >= 1, "keepGens must be >= 1")
     val m = meta(tablePath, name)
@@ -598,50 +566,15 @@ object GraftIndex {
     deleted
   }
 
-  /** Continuous maintenance: a Structured Streaming ticker drives
-    * [[refresh]] per micro-batch, so the index FOLLOWS the table —
-    * upserts/deletes/streamed writes land, the next tick folds them in —
-    * with start/stop/trigger lifecycle and no manual refresh calls. The
-    * composition twin of [[ChangeFeed.streamInto]]; position is owned by
-    * `meta.indexedVersion` (restart-safe without a checkpoint, replays
-    * idempotent per the refresh contract).
-    */
-  def streamRefresh(spark: SparkSession, tablePath: String, name: String = "vec",
-                    trigger: org.apache.spark.sql.streaming.Trigger =
-                      org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .writeStream
-      .foreachBatch { (_: DataFrame, _: Long) => refresh(spark, tablePath, name); () }
-      .trigger(trigger)
-      .start()
-
-  /** Bucket-pruned point lookup of candidate keys' float vectors at the
-    * pinned version — the exact-rerank substrate for quantized layouts
-    * (the [[GraftHnsw]] shape): n candidate keys → ≤ n bucket reads,
-    * never a table scan. `keys` is the serving-sized distinct key set
-    * (all key columns); returns keyCols + the float vector column.
+  /** The float vectors of a serving-sized distinct key set (all key
+    * columns) at the pinned version — the exact-rerank substrate for
+    * quantized layouts (the [[GraftHnsw]] shape), by the bucket-pruned
+    * point lookup; returns keyCols + the float vector column.
     */
   private def exactVectors(spark: SparkSession, tablePath: String, m: IndexMeta,
-                           keys: DataFrame): DataFrame = {
-    val (_, defaultBuckets, _) = GraftTable.meta(tablePath)
-    val nb = GraftTable.bucketsAt(tablePath, m.indexedVersion, defaultBuckets)
-    val buckets = keys
-      .select(GraftTable.bucketCol(m.keyCols, nb).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    GraftTable.readBuckets(spark, tablePath, m.indexedVersion, buckets)
-      .join(broadcast(keys), m.keyCols)
+                           keys: DataFrame): DataFrame =
+    AttachedIndex.lookup(spark, tablePath, m.indexedVersion, m.keyCols, keys)
       .select(m.keyCols.map(col) :+ col(m.vecCol): _*)
-  }
-
-  private def requireFresh(tablePath: String, m: IndexMeta, allowStale: Boolean): Unit = {
-    val head = GraftTable.latestVersion(tablePath)
-    if (!allowStale && head != m.indexedVersion)
-      throw new IllegalStateException(
-        s"index '${m.name}' on $tablePath is STALE: it reflects table version " +
-          s"${m.indexedVersion} but the table is at $head — run " +
-          "GraftIndex.refresh, or probe(allowStale = true) to serve the indexed snapshot")
-  }
 
   /** Top-k against the table-attached index (ivf: exact inside probed
     * cells; ivfpq: ADC + exact re-rank of `rerankFactor`·k survivors —
@@ -665,26 +598,15 @@ object GraftIndex {
     val (m, model) = open(spark, tablePath, name)
     requireFresh(tablePath, m, allowStale)
     pred.foreach { p =>
-      val matched = GraftTable.read(spark, tablePath, m.indexedVersion)
-        .filter(p).filter(col(m.vecCol).isNotNull)
+      val matched = AttachedIndex.matching(spark, tablePath, m.indexedVersion, p, m.vecCol)
       // metadata-first leg selection (two regimes: brute vs pushed scan,
       // so acceptCap = bruteForceCap) — see GraftTable.metadataMatchCount
       val nMatched = GraftTable.metadataMatchCount(spark, tablePath,
         m.indexedVersion, p, Seq(m.vecCol), bruteForceCap, bruteForceCap)(
         matched.count())
-      if (nMatched <= bruteForceCap) {
-        val ord = if (m.metric == "l2") asc("score") else desc("score")
-        val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion)
-        val canonical = sc match {
-          case Some(st) => st.fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
-          case None => matched.columns.toSeq.filterNot(_ == m.vecCol) :+ "score"
-        }
-        return matched
-          .withColumn("score", graft.operators.VectorSearch.scoreCol(
-            col(m.vecCol), typedlit(query), m.metric))
-          .orderBy(ord, asc(m.keyCols.head)).limit(k)
-          .select(canonical.map(col): _*)
-      }
+      if (nMatched <= bruteForceCap)
+        return AttachedIndex.bruteForceTopK(tablePath, m.indexedVersion, matched,
+          m.vecCol, m.keyCols.head, m.metric, query, k)
     }
     // an index over an EMPTY table (every cell dropped) is valid state:
     // zero rows, shaped like any other probe (table columns minus the
@@ -711,12 +633,10 @@ object GraftIndex {
           // bucket-pruned point lookup, so emitted scores are exact
           // float arithmetic either way. Corpus-covering rerankFactor
           // with nprobe = nlist ⇒ exact, full stop (the oracle row).
-          require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-          val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
           // localCheckpoint: the frontier is serving-sized and feeds
           // BOTH the bucket-set computation and the rerank join
           val front = IvfIndex.quantizedCandidates(spark, ivf, m.keyCols.head,
-            query, kf, nprobe, pred).localCheckpoint()
+            query, AttachedIndex.frontierSize(k, rerankFactor), nprobe, pred).localCheckpoint()
           if (front.isEmpty)
             GraftTable.read(spark, tablePath, m.indexedVersion).limit(0)
               .withColumn("score", lit(0.0))
@@ -827,30 +747,16 @@ object GraftIndex {
     if (ivf.files.exists(_.isEmpty)) return emptyOut
     pred.foreach { p =>
       require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-      import spark.implicits._
-      val matched = GraftTable.read(spark, tablePath, m.indexedVersion)
-        .filter(p).filter(col(m.vecCol).isNotNull)
+      val matched = AttachedIndex.matching(spark, tablePath, m.indexedVersion, p, m.vecCol)
       // metadata-first leg selection (two regimes: brute vs pushed scan,
       // so acceptCap = bruteForceCap) — see GraftTable.metadataMatchCount
       val n = GraftTable.metadataMatchCount(spark, tablePath,
         m.indexedVersion, p, Seq(m.vecCol), bruteForceCap, bruteForceCap)(
         matched.count())
       if (n == 0) return emptyOut
-      if (n <= bruteForceCap) {
-        // exact: broadcast the filtered subset once, score every
-        // (query, match) pair — ≤ |Q|·bruteForceCap rows, bounded.
-        // Composite record keys ((tenant, id)-keyed tables) ride the
-        // per-query cut as ONE orderable struct and expand back — the
-        // IvfIndex.keyStruct/expandKey convention.
-        val qdf = queries.toDF("qid", "__qvec")
-        val scored = qdf.crossJoin(broadcast(
-            matched.select(IvfIndex.keyStruct(m.keyCols), col(m.vecCol).as("__mvec"))))
-          .withColumn("score", graft.operators.VectorSearch.scoreCol(
-            col("__mvec"), col("__qvec"), m.metric))
-          .select(col("qid"), col(IvfIndex.keyName(m.keyCols)), col("score"))
-        return IvfIndex.expandKey(graft.operators.VectorSearch.perQueryTopK(
-          scored, "qid", IvfIndex.keyName(m.keyCols), k, m.metric), m.keyCols)
-      }
+      if (n <= bruteForceCap)
+        return AttachedIndex.bruteForceKnn(spark, queries, matched, m.keyCols,
+          m.vecCol, m.metric, k)
       // loose pred: fall through — the pred pushes into the cell scans
       // below (both the float32 and quantized candidate stages take it)
     }
@@ -864,11 +770,9 @@ object GraftIndex {
       // set is ≤ |Q|·rerankFactor·k rows, serving-sized). The
       // [[GraftHnsw.knnJoin]] shape on IVF cells. Composite keys ride
       // the cuts as one struct (the keyStruct/expandKey convention).
-      require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
       import spark.implicits._
-      val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
       val cands = IvfIndex.quantizedKnnCandidatesKeys(spark, ivf, m.keyCols, queries,
-          kf, nprobe, pred)
+          AttachedIndex.frontierSize(k, rerankFactor), nprobe, pred)
         .localCheckpoint()
       if (cands.isEmpty) return emptyOut
       val vecs = exactVectors(spark, tablePath, m,

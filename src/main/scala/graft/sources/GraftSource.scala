@@ -302,11 +302,8 @@ private[sources] class GraftStreamSink(path: String, keys: Option[Seq[String]],
     // opt-in index freshness: refresh folds (indexedVersion, head], so
     // every tick catches up ALL backlog regardless of missed ticks
     if (refreshEvery > 0 && batchId % refreshEvery == 0) {
-      GraftIndex.list(path).foreach(m => GraftIndex.refresh(spark, path, m.name))
-      TextIndex.list(path).foreach(m =>
-        TextIndex.refresh(spark, path, m.name, maxSegments = maxSegments))
-      GraftHnsw.list(path).foreach(m =>
-        GraftHnsw.refresh(spark, path, m.name, maxSegments = maxSegments))
+      AttachedIndex.list(path).foreach(m =>
+        m.family.refreshUpTo(spark, path, m.name, maxSegments))
     }
   }
 

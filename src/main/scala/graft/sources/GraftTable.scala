@@ -133,20 +133,46 @@ object GraftTable {
       }
     }
 
-    /** Atomic content swap: write to a sibling tmp file, rename over
-      * `p`. POSIX rename replaces the target in one step; on FSs whose
-      * rename refuses an existing target (HDFS), the delete+rename
-      * fallback leaves only a missing-file window — readers see old
-      * content, new content, or absence, NEVER a torn/empty read.
+    /** Atomic content swap: write to a sibling temp file unique to this
+      * call, rename it over `p`. Readers see old content or new content,
+      * never a torn or empty read, and concurrent swaps of one path never
+      * share a temp file — the last rename wins whole.
+      *
+      * Storage-dependent, handled per scheme (as [[putIfAbsent]]):
+      *  - Local `file:`: the platform rename(2), which replaces the target
+      *    in one step. Hadoop's checksummed local FS is bypassed: its
+      *    rename moves `.crc` sidecars separately, so a concurrent reader
+      *    could check new bytes against an old sidecar. A sidecar an
+      *    earlier Hadoop write left behind is deleted BEFORE the swap (a
+      *    Hadoop read of a file without one skips verification).
+      *  - Elsewhere: Hadoop rename. On FSs whose rename refuses an
+      *    existing target (HDFS), the delete+rename fallback leaves a
+      *    missing-file window — old content, new content, or absence.
       */
     def replaceString(p: Path, s: String): Unit = {
-      val tmp = new Path(p.getParent, p.getName + ".tmp")
-      writeString(tmp, s)
+      val tmpName = s".${p.getName}.${java.util.UUID.randomUUID}.tmp"
       val f = fs(p)
-      if (!f.rename(tmp, p)) {
-        f.delete(p, false)
-        if (!f.rename(tmp, p))
-          throw new java.io.IOException(s"atomic replace failed for $p")
+      if (Option(f.getScheme).exists(_.equalsIgnoreCase("file"))) {
+        import java.nio.file.{Files, StandardCopyOption}
+        val local = java.nio.file.Paths.get(p.toUri.getPath)
+        Files.createDirectories(local.getParent)
+        val tmp = local.resolveSibling(tmpName)
+        Files.writeString(tmp, s)
+        try {
+          Files.deleteIfExists(local.resolveSibling(s".${p.getName}.crc"))
+          Files.move(tmp, local, StandardCopyOption.ATOMIC_MOVE)
+        } finally Files.deleteIfExists(tmp)
+        ()
+      } else {
+        val tmp = new Path(p.getParent, tmpName)
+        writeString(tmp, s)
+        if (!f.rename(tmp, p)) {
+          f.delete(p, false)
+          if (!f.rename(tmp, p)) {
+            f.delete(tmp, false)
+            throw new java.io.IOException(s"atomic replace failed for $p")
+          }
+        }
       }
     }
 
@@ -1089,7 +1115,7 @@ object GraftTable {
   /** Refuse a column mutation while derived state still references the
     * column by name: CHECK constraints (their stored SQL would stop
     * resolving — or worse, resolve against a different column after a
-    * rename) and table-attached vector/text indexes (whose refresh
+    * rename) and table-attached indexes of every family (whose refresh
     * reads the column from the head snapshot). Dropping the dependent
     * first is the explicit, loud path.
     */
@@ -1099,27 +1125,11 @@ object GraftTable {
       require(hit.isEmpty, s"$what: column(s) ${hit.mkString(", ")} referenced by " +
         s"CHECK constraint '$name' ($sql) — DROP CONSTRAINT first")
     }
-    scala.util.Try(GraftIndex.list(path)).getOrElse(Nil).foreach { im =>
-      val hit = (im.vecCol +: im.keyCols).toSet.intersect(cols)
-      require(hit.isEmpty, s"$what: column(s) ${hit.mkString(", ")} used by vector " +
-        s"index '${im.name}' — drop the index first")
+    AttachedIndex.list(path).foreach { im =>
+      val hit = im.columns.toSet.intersect(cols)
+      require(hit.isEmpty, s"$what: column(s) ${hit.mkString(", ")} used by " +
+        s"${im.family.noun} '${im.name}' — drop the index first")
     }
-    scala.util.Try(MetaIO.list(new Path(path, "_textidx"))).getOrElse(Nil)
-      .filter(_.isDirectory).map(_.getPath.getName).foreach { n =>
-        scala.util.Try(TextIndex.meta(path, n)).toOption.foreach { tm =>
-          val hit = (tm.textCol +: tm.keyCols).toSet.intersect(cols)
-          require(hit.isEmpty, s"$what: column(s) ${hit.mkString(", ")} used by text " +
-            s"index '$n' — drop the index first")
-        }
-      }
-    scala.util.Try(MetaIO.list(new Path(path, "_hnswidx"))).getOrElse(Nil)
-      .filter(_.isDirectory).map(_.getPath.getName).foreach { n =>
-        scala.util.Try(GraftHnsw.meta(path, n)).toOption.foreach { hm =>
-          val hit = Set(hm.vecCol, hm.keyCol).intersect(cols)
-          require(hit.isEmpty, s"$what: column(s) ${hit.mkString(", ")} used by HNSW " +
-            s"index '$n' — drop the index first")
-        }
-      }
   }
 
   /** ALTER TABLE DROP COLUMN — METADATA-ONLY, like [[addColumns]]: the

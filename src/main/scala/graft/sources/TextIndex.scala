@@ -57,7 +57,12 @@ import org.apache.spark.sql.functions._
   * pins the table snapshot, [[search]] FAILS LOUDLY when the table has
   * moved past it, `allowStale = true` serves the pinned snapshot.
   */
-object TextIndex {
+object TextIndex extends AttachedIndex.Family {
+  type M = TextMeta
+  val dir = "_textidx"
+  val noun = "text index"
+  val defaultName = "txt"
+  val sqlPrefix = "text_index"
 
   final case class TextMeta(name: String, textCol: String, keyCols: Seq[String],
                             nbuckets: Int, indexedVersion: Int,
@@ -67,21 +72,19 @@ object TextIndex {
                             /** posting format: 1 = (tf, dl) only; 2 = positional
                               * (every segment also stores the token's position
                               * list — the [[searchPhrase]] substrate) */
-                            pformat: Int = 2)
+                            pformat: Int = 2) extends AttachedIndex.Meta {
+    def family: AttachedIndex.Family = TextIndex
+    def columns: Seq[String] = textCol +: keyCols
+    private[sources] def report = ("text", textCol, "bm25", nbuckets)
+    private[sources] def fields =
+      Seq("textCol" -> textCol, "keyCols" -> keyCols.mkString(","),
+        "nbuckets" -> nbuckets.toString, "indexedVersion" -> indexedVersion.toString,
+        "ndocs" -> nDocs.toString, "sumdl" -> sumDl.toString, "pformat" -> pformat.toString,
+        "segments" -> segments.map { case (n, p, t) =>
+          s"$n:" + (if (p) "p" else "") + (if (t) "t" else "") }.mkString(","))
+  }
 
-  private def root(tablePath: String, name: String) = s"$tablePath/_textidx/$name"
-  private def metaPath(tablePath: String, name: String) = new Path(root(tablePath, name), "meta")
-  private def segPath(tablePath: String, name: String, seg: String) =
-    s"${root(tablePath, name)}/$seg"
-
-  def exists(tablePath: String, name: String = "txt"): Boolean =
-    GraftTable.MetaIO.exists(metaPath(tablePath, name))
-
-  def meta(tablePath: String, name: String = "txt"): TextMeta = {
-    val p = metaPath(tablePath, name)
-    require(GraftTable.MetaIO.exists(p), s"no text index '$name' at $tablePath")
-    val kv = GraftTable.MetaIO.readString(p).split("\n")
-      .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+  protected def decode(name: String, kv: Map[String, String]): TextMeta = {
     val segs = kv.getOrElse("segments", "") match {
       case "" => Seq.empty
       case s => s.split(",").toSeq.map { e =>
@@ -97,13 +100,17 @@ object TextIndex {
       kv.getOrElse("pformat", "1").toInt)
   }
 
-  private def writeMeta(tablePath: String, m: TextMeta): Unit =
-    GraftTable.MetaIO.replaceString(metaPath(tablePath, m.name),
-      s"textCol=${m.textCol}\nkeyCols=${m.keyCols.mkString(",")}\n" +
-        s"nbuckets=${m.nbuckets}\nindexedVersion=${m.indexedVersion}\n" +
-        s"ndocs=${m.nDocs}\nsumdl=${m.sumDl}\npformat=${m.pformat}\nsegments=" +
-        m.segments.map { case (n, p, t) =>
-          s"$n:" + (if (p) "p" else "") + (if (t) "t" else "") }.mkString(","))
+  protected def pinnedAt(m: TextMeta, version: Int): TextMeta = m.copy(indexedVersion = version)
+
+  private[sources] def refreshUpTo(spark: SparkSession, tablePath: String, name: String,
+                                   maxSegments: Int): Option[(Int, Int)] =
+    refresh(spark, tablePath, name, maxSegments)
+
+  /** The ticker folds back to one segment past 16. */
+  override protected def tickerMaxSegments: Int = 16
+
+  private def segPath(tablePath: String, name: String, seg: String) =
+    s"${root(tablePath, name)}/$seg"
 
   // ---- tokenization ------------------------------------------------------
   // the repo-wide text convention (text_tokens/text_keywords oracles):
@@ -171,7 +178,7 @@ object TextIndex {
   }
 
   private def newSegName(ord: Int): String =
-    s"seg$ord-${java.util.UUID.randomUUID.toString.take(8)}"
+    s"seg$ord-${AttachedIndex.token()}"
 
   /** Write one segment's postings/tombs; returns the meta entry. Either
     * side may be empty — empty parquet writes leave no readable schema,
@@ -200,9 +207,7 @@ object TextIndex {
     */
   def create(spark: SparkSession, tablePath: String, textCol: String,
              nbuckets: Int = 16, name: String = "txt"): Unit = {
-    val v = GraftTable.latestVersion(tablePath)
-    require(v >= 0, s"no table at $tablePath")
-    require(!exists(tablePath, name), s"text index '$name' already exists at $tablePath")
+    val v = pinForCreate(tablePath, name)
     val keys = GraftTable.keyColumns(tablePath)
     val reserved = Set("token", "tf", "dl", "tbucket", "df", "score", "_toks", "_seg", "_tseg")
     (keys :+ textCol).foreach(c =>
@@ -221,7 +226,7 @@ object TextIndex {
       val entry = writeSegment(tablePath, name, seg,
         if (n > 0) Some(postingsFromToks(toks, keys, nbuckets)) else None, None)
       // meta lands LAST — the commit point
-      writeMeta(tablePath, TextMeta(name, textCol, keys, nbuckets, v, n, sdl,
+      commit(tablePath, TextMeta(name, textCol, keys, nbuckets, v, n, sdl,
         if (n > 0) Seq(entry) else Seq.empty))
     } finally {
       toks.unpersist(blocking = false)
@@ -257,13 +262,8 @@ object TextIndex {
   }
 
   private def refreshOnce(spark: SparkSession, tablePath: String,
-                          name: String): Option[(Int, Int)] = {
-    val m = meta(tablePath, name)
-    val head = GraftTable.latestVersion(tablePath)
-    if (head <= m.indexedVersion) return None
-    val batch = GraftTable.changes(spark, tablePath, m.indexedVersion, head)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+                          name: String): Option[(Int, Int)] =
+    refreshWith(spark, tablePath, name) { (m, head, batch) =>
       val keyCols = m.keyCols.map(col)
       val changedKeys = batch.select(keyCols: _*).distinct()
       // previous images of every changed doc that WAS indexed: their
@@ -286,42 +286,27 @@ object TextIndex {
       try {
         val (nOld, dlOld) = statsOfDl(oldSlim)
         val (nNew, dlNew) = statsOfDl(newToks)
-        if (nOld == 0 && nNew == 0) {
-          // nothing indexed changed (e.g. all changed rows have null
-          // text): advance the version pin alone
-          writeMeta(tablePath, m.copy(indexedVersion = head))
-          return Some((m.indexedVersion, head))
+        // nothing indexed changed (e.g. all changed rows have null
+        // text): None — the version pin advances alone
+        if (nOld == 0 && nNew == 0) None
+        else {
+          val seg = newSegName(m.segments.size)
+          val entry = writeSegment(tablePath, name, seg,
+            if (nNew > 0) Some(postingsFromToks(newToks, m.keyCols, m.nbuckets)) else None,
+            if (nOld > 0) Some(oldSlim.select(keyCols: _*)) else None)
+          // segment list + stats + version pin commit together
+          Some(m.copy(indexedVersion = head,
+            nDocs = m.nDocs - nOld + nNew, sumDl = m.sumDl - dlOld + dlNew,
+            segments = m.segments :+ entry))
         }
-        val seg = newSegName(m.segments.size)
-        val entry = writeSegment(tablePath, name, seg,
-          if (nNew > 0) Some(postingsFromToks(newToks, m.keyCols, m.nbuckets)) else None,
-          if (nOld > 0) Some(oldSlim.select(keyCols: _*)) else None)
-        // THE commit point: segment list + stats + version pin, one swap
-        writeMeta(tablePath, m.copy(indexedVersion = head,
-          nDocs = m.nDocs - nOld + nNew, sumDl = m.sumDl - dlOld + dlNew,
-          segments = m.segments :+ entry))
-        Some((m.indexedVersion, head))
       } finally {
         oldSlim.unpersist(blocking = false)
         newToks.unpersist(blocking = false)
         ()
       }
-    } finally {
-      batch.unpersist(blocking = false)
-      ()
     }
-  }
 
   // ---- serving -----------------------------------------------------------
-
-  private def requireFresh(tablePath: String, m: TextMeta, allowStale: Boolean): Unit = {
-    val head = GraftTable.latestVersion(tablePath)
-    if (!allowStale && head != m.indexedVersion)
-      throw new IllegalStateException(
-        s"text index '${m.name}' on $tablePath is STALE: it reflects table version " +
-          s"${m.indexedVersion} but the table is at $head — run " +
-          "TextIndex.refresh, or search(allowStale = true) to serve the indexed snapshot")
-  }
 
   /** LIVE postings of the query's terms: every segment's posting
     * partitions for the terms' tbuckets (all other partitions pruned),
@@ -648,27 +633,9 @@ object TextIndex {
       None)
     // re-derived from the table ⇒ every surviving segment is positional:
     // compacting a legacy (pformat 1) index upgrades it
-    writeMeta(tablePath, m.copy(pformat = 2,
+    commit(tablePath, m.copy(pformat = 2,
       segments = if (m.nDocs > 0) Seq(entry) else Seq.empty))
   }
-
-  /** Continuous maintenance: a Structured Streaming ticker drives
-    * [[refresh]] per micro-batch so the text index FOLLOWS the table —
-    * the keyword twin of [[GraftIndex.streamRefresh]]. Position is
-    * owned by `meta.indexedVersion` (restart-safe without a
-    * checkpoint; replays idempotent per the refresh contract).
-    */
-  def streamRefresh(spark: SparkSession, tablePath: String, name: String = "txt",
-                    trigger: org.apache.spark.sql.streaming.Trigger =
-                      org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"),
-                    maxSegments: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .writeStream
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        refresh(spark, tablePath, name, maxSegments); () }
-      .trigger(trigger)
-      .start()
 
   /** Delete segment dirs the current meta no longer references (crashed
     * attempts, compacted-away segments, racing losers). Same
@@ -676,23 +643,6 @@ object TextIndex {
     * against a pre-compaction meta loses its files — run vacuum with
     * the maintenance cadence, not eagerly after every compact.
     */
-  /** All text indexes on the table (name-sorted metas); unreadable
-    * subdirs (crashed half-creates with no meta yet) are skipped.
-    */
-  def list(tablePath: String): Seq[TextMeta] =
-    GraftTable.MetaIO.list(new Path(tablePath, "_textidx"))
-      .filter(_.isDirectory).map(_.getPath.getName).sorted
-      .flatMap(n => scala.util.Try(meta(tablePath, n)).toOption)
-
-  /** Drop the index entirely — derived state, the table is untouched.
-    * False when absent (IF EXISTS contract).
-    */
-  def drop(tablePath: String, name: String = "txt"): Boolean = {
-    if (!exists(tablePath, name)) return false
-    GraftTable.MetaIO.delete(new Path(root(tablePath, name)))
-    true
-  }
-
   def vacuum(tablePath: String, name: String = "txt"): Int = {
     val m = meta(tablePath, name)
     val live = m.segments.map(_._1).toSet

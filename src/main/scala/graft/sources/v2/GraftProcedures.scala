@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{GraftHnsw, GraftIndex, GraftTable, TextIndex}
+import graft.sources.{AttachedIndex, GraftHnsw, GraftIndex, GraftTable, TextIndex}
 
 /** The SQL `CALL` surface — lakehouse MAINTENANCE verbs through the
   * DSv2 [[org.apache.spark.sql.connector.catalog.ProcedureCatalog]]
@@ -538,27 +538,70 @@ object GraftProcedures {
     }
   }
 
-  private val indexRefresh = new Proc("index_refresh",
-    Array(in("table", StringType), inDefault("name", StringType, "'vec'")),
-    StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("from_version", IntegerType, nullable = false),
-      StructField("to_version", IntegerType, nullable = false),
-      StructField("refreshed", BooleanType, nullable = false)))) {
-    override def description(): String =
-      "fold the table's CDC delta since the indexed version into a new " +
-        "index generation (no-op row with refreshed = false when already current)"
-    override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
-      val path = tablePath(input)
-      val name = str(input, 1)
-      GraftIndex.refresh(spark, path, name) match {
-        case Some((from, to)) => Array(InternalRow(utf8(name), from, to, true))
-        case None =>
-          val head = GraftTable.latestVersion(path)
-          Array(InternalRow(utf8(name), head, head, false))
+  // ---- the lifecycle verbs every index family shares, one definition
+  // each: `<prefix>_refresh`, `<prefix>_vacuum`, `<prefix>_drop`
+
+  private def nameArg(f: AttachedIndex.Family) =
+    inDefault("name", StringType, s"'${f.defaultName}'")
+
+  /** `max_segments` exists for the segmented families only. */
+  private def refreshProc(f: AttachedIndex.Family, segmented: Boolean, desc: String) =
+    new Proc(s"${f.sqlPrefix}_refresh",
+      Array(in("table", StringType), nameArg(f)) ++
+        (if (segmented) Some(inDefault("max_segments", IntegerType, "0")) else None),
+      StructType(Seq(
+        StructField("name", StringType, nullable = false),
+        StructField("from_version", IntegerType, nullable = false),
+        StructField("to_version", IntegerType, nullable = false),
+        StructField("refreshed", BooleanType, nullable = false)))) {
+      override def description(): String = desc
+      override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
+        val path = tablePath(input)
+        val name = str(input, 1)
+        f.refreshUpTo(spark, path, name, if (segmented) reqInt(input, 2) else 0) match {
+          case Some((from, to)) => Array(InternalRow(utf8(name), from, to, true))
+          case None =>
+            val head = GraftTable.latestVersion(path)
+            Array(InternalRow(utf8(name), head, head, false))
+        }
       }
     }
-  }
+
+  private def vacuumProc(f: AttachedIndex.Family, extra: Seq[ProcedureParameter],
+                         counted: String, desc: String)(
+      vacuum: (String, String, InternalRow) => Int) =
+    new Proc(s"${f.sqlPrefix}_vacuum",
+      Array(in("table", StringType), nameArg(f)) ++ extra,
+      StructType(Seq(
+        StructField("name", StringType, nullable = false),
+        StructField(counted, IntegerType, nullable = false)))) {
+      override def description(): String = desc
+      override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
+        val path = tablePath(input)
+        val name = str(input, 1)
+        Array(InternalRow(utf8(name), vacuum(path, name, input)))
+      }
+    }
+
+  private def dropProc(f: AttachedIndex.Family) =
+    new Proc(s"${f.sqlPrefix}_drop",
+      Array(in("table", StringType), nameArg(f)),
+      StructType(Seq(
+        StructField("name", StringType, nullable = false),
+        StructField("existed", BooleanType, nullable = false)))) {
+      override def description(): String =
+        s"drop the named ${f.noun} entirely (existed = false when absent); the " +
+          "table itself is untouched — an index is derived state"
+      override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
+        val path = tablePath(input)
+        val name = str(input, 1)
+        Array(InternalRow(utf8(name), f.drop(path, name)))
+      }
+    }
+
+  private val indexRefresh = refreshProc(GraftIndex, segmented = false,
+    "fold the table's CDC delta since the indexed version into a new " +
+      "index generation (no-op row with refreshed = false when already current)")
 
   /** Tags — named immutable version refs with vacuum retention (see
     * [[GraftTable.tagCreate]]): `CALL graft.tag_create(t, 'release')`
@@ -652,38 +695,16 @@ object GraftProcedures {
     * / `hnsw_vacuum` twin the family was missing. keep_gens > 1 keeps
     * older committed generations servable for probes pinned to them.
     */
-  private val indexVacuum = new Proc("index_vacuum",
-    Array(in("table", StringType), inDefault("name", StringType, "'vec'"),
-      inDefault("keep_gens", IntegerType, "1")),
-    StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("files_deleted", IntegerType, nullable = false)))) {
-    override def description(): String =
+  private val indexVacuum = vacuumProc(GraftIndex,
+      Seq(inDefault("keep_gens", IntegerType, "1")), "files_deleted",
       "delete layout data files, generation dirs and model dirs no kept " +
         "manifest references (post-refresh/rebuild garbage and crashed-" +
         "attempt orphans); keep_gens = how many committed generations " +
-        "stay servable"
-    override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
-      val path = tablePath(input)
-      val name = str(input, 1)
-      Array(InternalRow(utf8(name), GraftIndex.vacuum(path, name, reqInt(input, 2))))
-    }
+        "stay servable") {
+    (path, name, input) => GraftIndex.vacuum(path, name, reqInt(input, 2))
   }
 
-  private val indexDrop = new Proc("index_drop",
-    Array(in("table", StringType), inDefault("name", StringType, "'vec'")),
-    StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("existed", BooleanType, nullable = false)))) {
-    override def description(): String =
-      "drop a vector index entirely (existed = false when absent); the " +
-        "table itself is untouched — an index is derived state"
-    override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
-      val path = tablePath(input)
-      val name = str(input, 1)
-      Array(InternalRow(utf8(name), GraftIndex.drop(path, name)))
-    }
-  }
+  private val indexDrop = dropProc(GraftIndex)
 
   /** `CALL graft.maintain(t[, apply])` — the ONE table-services verb
     * (Hudi's table-service scheduler shape, the layer the reference
@@ -728,37 +749,30 @@ object GraftProcedures {
           s"$morDebt outstanding MOR log entr${if (morDebt == 1) "y" else "ies"}" +
             (if (apply) " folded" else ""))
       } else row("compact", needed = false, applied = false, "no MOR debt")
-      // stale indexes, all three families
-      def idxRow(kind: String, name: String, stale: Boolean)(refresh: => Unit): Unit =
-        if (stale) {
-          if (apply) refresh
-          row(s"${kind}_refresh", needed = true, applied = apply,
-            s"index '$name' lags the table head" + (if (apply) " — refreshed" else ""))
-        } else row(s"${kind}_refresh", needed = false, applied = false,
-          s"index '$name' current")
-      val headNow = () => GraftTable.latestVersion(path)
-      GraftIndex.list(path).foreach(m =>
-        idxRow("index", m.name, m.indexedVersion < headNow()) {
-          GraftIndex.refresh(spark, path, m.name); () })
-      TextIndex.list(path).foreach(m =>
-        idxRow("text_index", m.name, m.indexedVersion < headNow()) {
-          TextIndex.refresh(spark, path, m.name); () })
-      GraftHnsw.list(path).foreach(m =>
-        idxRow("hnsw", m.name, m.indexedVersion < headNow()) {
-          GraftHnsw.refresh(spark, path, m.name); () })
+      // stale indexes, every family
+      AttachedIndex.list(path).foreach { m =>
+        val service = s"${m.family.sqlPrefix}_refresh"
+        if (m.indexedVersion < GraftTable.latestVersion(path)) {
+          if (apply) m.family.refreshUpTo(spark, path, m.name, maxSegments = 0)
+          row(service, needed = true, applied = apply,
+            s"index '${m.name}' lags the table head" + (if (apply) " — refreshed" else ""))
+        } else row(service, needed = false, applied = false, s"index '${m.name}' current")
+      }
       // structural debt, RECOMMEND only (each fix is a full rewrite of
       // derived state — the operator should choose when to pay it):
       // a text index serving many segments scans every segment's
       // pruned partitions per query; an HNSW generation dragging many
-      // tombstone files filters every probe against them
-      TextIndex.list(path).foreach { m =>
+      // tombstone files filters every probe against them. Listed after
+      // the refreshes above, so the counts include what they appended.
+      val indexes = AttachedIndex.list(path)
+      indexes.collect { case m: TextIndex.TextMeta => m }.foreach { m =>
         val segs = m.segments.size
         row("text_index_compact", needed = segs > 8, applied = false,
           if (segs > 8) s"index '${m.name}' serves $segs segments — " +
             "run CALL graft.text_index_compact explicitly"
           else s"index '${m.name}' at $segs segment(s)")
       }
-      GraftHnsw.list(path).foreach { m =>
+      indexes.collect { case m: GraftHnsw.HnswMeta => m }.foreach { m =>
         val tombs = m.tombs.size
         row("hnsw_rebuild", needed = tombs > 8, applied = false,
           if (tombs > 8) s"index '${m.name}' filters $tombs tombstone file(s) " +
@@ -776,7 +790,7 @@ object GraftProcedures {
       // IVF generation debt: each refresh/rebuild orphans its previous
       // generation (storage, not probe latency — probes read only the
       // current manifest), reclaimed by an explicit index_vacuum
-      GraftIndex.list(path).foreach { m =>
+      indexes.collect { case m: GraftIndex.IndexMeta => m }.foreach { m =>
         val gens = GraftIndex.staleGenerations(path, m.name)
         row("index_vacuum", needed = gens > 8, applied = false,
           if (gens > 8) s"index '${m.name}' drags $gens stale generation/" +
@@ -815,19 +829,11 @@ object GraftProcedures {
     override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
       val path = tablePath(input)
       val head = GraftTable.latestVersion(path)
-      val vec = GraftIndex.list(path).map { m =>
-        InternalRow(utf8(m.name), utf8(m.kind), utf8(m.vecCol), utf8(m.metric),
-          m.nlist, m.indexedVersion, m.indexedVersion < head)
-      }
-      val txt = TextIndex.list(path).map { m =>
-        InternalRow(utf8(m.name), utf8("text"), utf8(m.textCol), utf8("bm25"),
-          m.nbuckets, m.indexedVersion, m.indexedVersion < head)
-      }
-      val hnsw = GraftHnsw.list(path).map { m =>
-        InternalRow(utf8(m.name), utf8("hnsw"), utf8(m.vecCol), utf8(m.metric),
-          m.m, m.indexedVersion, m.indexedVersion < head)
-      }
-      (vec ++ txt ++ hnsw).toArray
+      AttachedIndex.list(path).map { m =>
+        val (kind, column, metric, param) = m.report
+        InternalRow(utf8(m.name), utf8(kind), utf8(column), utf8(metric),
+          param, m.indexedVersion, m.indexedVersion < head)
+      }.toArray
     }
   }
 
@@ -856,29 +862,10 @@ object GraftProcedures {
     }
   }
 
-  private val textIndexRefresh = new Proc("text_index_refresh",
-    Array(in("table", StringType), inDefault("name", StringType, "'txt'"),
-      inDefault("max_segments", IntegerType, "0")),
-    StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("from_version", IntegerType, nullable = false),
-      StructField("to_version", IntegerType, nullable = false),
-      StructField("refreshed", BooleanType, nullable = false)))) {
-    override def description(): String =
-      "fold the table's CDC delta since the indexed version into one " +
-        "appended segment (no-op row with refreshed = false when " +
-        "current); max_segments > 0 auto-compacts past that many segments"
-    override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
-      val path = tablePath(input)
-      val name = str(input, 1)
-      TextIndex.refresh(spark, path, name, maxSegments = reqInt(input, 2)) match {
-        case Some((from, to)) => Array(InternalRow(utf8(name), from, to, true))
-        case None =>
-          val head = GraftTable.latestVersion(path)
-          Array(InternalRow(utf8(name), head, head, false))
-      }
-    }
-  }
+  private val textIndexRefresh = refreshProc(TextIndex, segmented = true,
+    "fold the table's CDC delta since the indexed version into one " +
+      "appended segment (no-op row with refreshed = false when " +
+      "current); max_segments > 0 auto-compacts past that many segments")
 
   private val textIndexCompact = new Proc("text_index_compact",
     Array(in("table", StringType), inDefault("name", StringType, "'txt'")),
@@ -899,35 +886,13 @@ object GraftProcedures {
     }
   }
 
-  private val textIndexVacuum = new Proc("text_index_vacuum",
-    Array(in("table", StringType), inDefault("name", StringType, "'txt'")),
-    StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("segments_deleted", IntegerType, nullable = false)))) {
-    override def description(): String =
+  private val textIndexVacuum = vacuumProc(TextIndex, Nil, "segments_deleted",
       "delete segment dirs the index meta no longer references " +
-        "(compacted-away or crashed-attempt orphans)"
-    override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
-      val path = tablePath(input)
-      val name = str(input, 1)
-      Array(InternalRow(utf8(name), TextIndex.vacuum(path, name)))
-    }
+        "(compacted-away or crashed-attempt orphans)") {
+    (path, name, _) => TextIndex.vacuum(path, name)
   }
 
-  private val textIndexDrop = new Proc("text_index_drop",
-    Array(in("table", StringType), inDefault("name", StringType, "'txt'")),
-    StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("existed", BooleanType, nullable = false)))) {
-    override def description(): String =
-      "drop a text index entirely (existed = false when absent); the " +
-        "table itself is untouched — an index is derived state"
-    override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
-      val path = tablePath(input)
-      val name = str(input, 1)
-      Array(InternalRow(utf8(name), TextIndex.drop(path, name)))
-    }
-  }
+  private val textIndexDrop = dropProc(TextIndex)
 
   /** HNSW-index lifecycle through SQL — the maintenance half of the
     * `graft_hnsw_search` TVF. Routed into [[graft.sources.GraftHnsw]]'s
@@ -962,30 +927,11 @@ object GraftProcedures {
     }
   }
 
-  private val hnswRefresh = new Proc("hnsw_refresh",
-    Array(in("table", StringType), inDefault("name", StringType, "'hnsw'"),
-      inDefault("max_segments", IntegerType, "0")),
-    StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("from_version", IntegerType, nullable = false),
-      StructField("to_version", IntegerType, nullable = false),
-      StructField("refreshed", BooleanType, nullable = false)))) {
-    override def description(): String =
-      "fold the table's CDC delta since the indexed version into the " +
-        "graph (appends + horizon tombstones; no-op row with " +
-        "refreshed = false when current); max_segments > 0 auto-merges " +
-        "the smallest tier past that many segments (the text_index_refresh twin)"
-    override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
-      val path = tablePath(input)
-      val name = str(input, 1)
-      GraftHnsw.refresh(spark, path, name, maxSegments = reqInt(input, 2)) match {
-        case Some((from, to)) => Array(InternalRow(utf8(name), from, to, true))
-        case None =>
-          val head = GraftTable.latestVersion(path)
-          Array(InternalRow(utf8(name), head, head, false))
-      }
-    }
-  }
+  private val hnswRefresh = refreshProc(GraftHnsw, segmented = true,
+    "fold the table's CDC delta since the indexed version into the " +
+      "graph (appends + horizon tombstones; no-op row with " +
+      "refreshed = false when current); max_segments > 0 auto-merges " +
+      "the smallest tier past that many segments (the text_index_refresh twin)")
 
   private val hnswRebuild = new Proc("hnsw_rebuild",
     Array(in("table", StringType), inDefault("name", StringType, "'hnsw'"),
@@ -1035,34 +981,12 @@ object GraftProcedures {
     }
   }
 
-  private val hnswVacuum = new Proc("hnsw_vacuum",
-    Array(in("table", StringType), inDefault("name", StringType, "'hnsw'")),
-    StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("generations_deleted", IntegerType, nullable = false)))) {
-    override def description(): String =
-      "delete non-current generation dirs (post-rebuild garbage)"
-    override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
-      val path = tablePath(input)
-      val name = str(input, 1)
-      Array(InternalRow(utf8(name), GraftHnsw.vacuum(path, name)))
-    }
+  private val hnswVacuum = vacuumProc(GraftHnsw, Nil, "generations_deleted",
+      "delete non-current generation dirs (post-rebuild garbage)") {
+    (path, name, _) => GraftHnsw.vacuum(path, name)
   }
 
-  private val hnswDrop = new Proc("hnsw_drop",
-    Array(in("table", StringType), inDefault("name", StringType, "'hnsw'")),
-    StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("existed", BooleanType, nullable = false)))) {
-    override def description(): String =
-      "drop an HNSW index entirely (existed = false when absent); the " +
-        "table itself is untouched — an index is derived state"
-    override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
-      val path = tablePath(input)
-      val name = str(input, 1)
-      Array(InternalRow(utf8(name), GraftHnsw.drop(path, name)))
-    }
-  }
+  private val hnswDrop = dropProc(GraftHnsw)
 
   /** Read-only vacuum preview ([[GraftTable.vacuumPlan]]): what WOULD
     * the same-argument vacuum reclaim — the check an operator runs

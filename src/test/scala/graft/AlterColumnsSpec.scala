@@ -224,6 +224,29 @@ class AlterColumnsSpec extends AnyFunSuite with Matchers {
     GraftTable.read(spark, path).columns should contain("emb")
   }
 
+  test("DROP/RENAME refuse columns a table-attached text index reads") {
+    val path = Files.createTempDirectory("altercol").toString + "/t"
+    GraftTable.create(
+      spark.range(0, 30).toDF("k")
+        .withColumn("text", concat(lit("doc "), col("k")))
+        .withColumn("s", concat(lit("d"), col("k"))),
+      path, Seq("k"), nbuckets = 2)
+    graft.sources.TextIndex.create(spark, path, "text", nbuckets = 2)
+    intercept[IllegalArgumentException] {
+      GraftTable.dropColumns(spark, path, Seq("text"))
+    }.getMessage should include("text index")
+    intercept[IllegalArgumentException] {
+      GraftTable.renameColumn(spark, path, "text", "body")
+    }.getMessage should include("text index")
+    // unrelated columns still evolve freely
+    GraftTable.dropColumns(spark, path, Seq("s"))
+    GraftTable.droppedColumns(path) shouldBe Set("s")
+    // dropping the index unlocks the column
+    graft.sources.TextIndex.drop(path)
+    GraftTable.renameColumn(spark, path, "text", "body")
+    GraftTable.read(spark, path).columns should contain("body")
+  }
+
   test("SQL ALTER TABLE DROP COLUMN / RENAME COLUMN route through the catalog") {
     val path = freshTable()
     withCatalog {

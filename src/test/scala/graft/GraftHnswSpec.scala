@@ -296,6 +296,23 @@ class GraftHnswSpec extends AnyFunSuite with Matchers {
     GraftTable.read(spark, path).count() shouldBe 10L
   }
 
+  test("streamRefresh: the HNSW index follows the table with no manual refresh calls") {
+    val path = mkTable(40)
+    GraftHnsw.create(spark, path, "vec", nSegments = 1, m = 8, efConstruction = 32)
+    val q = GraftHnsw.streamRefresh(spark, path,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+    try {
+      GraftTable.upsert(spark, path, Seq((0L, vec(31337L), "fresh")).toDF("id", "vec", "s"))
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (GraftHnsw.meta(path).indexedVersion < 1 && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      GraftHnsw.meta(path).indexedVersion shouldBe 1
+      // fresh by construction: the non-stale probe serves the upserted row
+      val top = GraftHnsw.probe(spark, path, vec(31337L), 1, ef = 64).head()
+      (top.getLong(0), top.getString(1)) shouldBe ((0L, "fresh"))
+    } finally q.stop()
+  }
+
   // ---- tiered segment merge (the Lucene background-merge contract) ----
 
   test("merge folds the smallest segments beyond target; probes stay exact; at/under target is a no-op") {

@@ -340,9 +340,9 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
   test("metadata IO goes through the Hadoop FileSystem layer: file: URI end-to-end") {
     // java.nio.Paths cannot resolve a "file:"-prefixed string (it would
     // treat it as a relative path named "file:"), so every metadata op
-    // succeeding here proves create/read/manifest/commit/vacuum all run
-    // through org.apache.hadoop.fs.FileSystem — the layer that also
-    // speaks hdfs:// and s3a://.
+    // succeeding here proves create/read/manifest/commit/vacuum all resolve
+    // their paths through org.apache.hadoop.fs.FileSystem — the layer that
+    // also speaks hdfs:// and s3a://.
     val dir = Files.createTempDirectory("graft_hfs")
     val path = "file:" + dir.toString + "/t"
     GraftTable.create(Seq((1L, 1)).toDF("k", "x"), path, Seq("k"), nbuckets = 2)
@@ -352,9 +352,11 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
       .collect().map(r => (r.getLong(0), r.getInt(1))) shouldBe Array((1L, 2), (2L, 5))
     GraftTable.changes(spark, path, 0, 1)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet shouldBe Set((1L, 2), (2L, 5))
-    // commit markers written through Hadoop's checksummed local FS leave
-    // .crc sidecars — direct evidence the write used the FileSystem API
-    java.nio.file.Files.exists(dir.resolve("t/_commits/.v0.crc")) shouldBe true
+    // commit markers are swapped in by an atomic rename of a private temp
+    // file, which on the local FS bypasses Hadoop's checksummed layer: it
+    // must leave no .crc sidecar, since a stale one would fail every
+    // later checksummed read of the marker (the reads above and below)
+    java.nio.file.Files.exists(dir.resolve("t/_commits/.v0.crc")) shouldBe false
     GraftTable.compact(spark, path)
     GraftTable.vacuum(path, keepVersions = 1)
     GraftTable.read(spark, path).count() shouldBe 2
